@@ -986,13 +986,21 @@ object Dedup {
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .localCheckpoint(true)
-    def sumOf(labels: DataFrame): java.math.BigDecimal =
-      Option(labels.agg(sum(col("lbl").cast("decimal(38,0)")))
-        .head.getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
-    var labels = edges.groupBy(col("src"))
+    // Convergence probe: the label sum, collected through observe()
+    // as a side metric of the pass that materializes the labels (one
+    // action per round, init labels included) — labels only ever
+    // decrease, so an unchanged sum ⟺ a fixed point.
+    def observedSum(labels: DataFrame): (DataFrame, java.math.BigDecimal) = {
+      val obs = new org.apache.spark.sql.Observation()
+      val done = labels
+        .observe(obs, sum(col("lbl").cast("decimal(38,0)")).as("s"))
+        .localCheckpoint(true)
+      (done, Option(obs.get("s").asInstanceOf[java.math.BigDecimal])
+        .getOrElse(java.math.BigDecimal.ZERO))
+    }
+    var (labels, prevSum) = observedSum(edges.groupBy(col("src"))
       .agg(least(col("src"), min(col("dst"))).as("lbl"))
-      .select(col("src").as("node"), col("lbl"))
-      .localCheckpoint(true)
+      .select(col("src").as("node"), col("lbl")))
     // self-loop arm: exactly one (x, x) row per node, projected from
     // the materialized init labels. With it, the propagate agg's min
     // runs over the CLOSED neighborhood and the own-label least-join
@@ -1019,7 +1027,6 @@ object Dedup {
     lazy val closedEdgesPinned: DataFrame = closedEdgesRaw
       .repartition(col("dst"))
       .localCheckpoint(true)
-    var prevSum = sumOf(labels)
     var converged = false
     var iter = 0
     while (!converged && iter < maxIters) {
@@ -1035,19 +1042,9 @@ object Dedup {
       // pointer jump: label values are themselves node ids (mins over
       // node ids), so label(label) is total — the inner self-join
       // drops nothing.
-      // Convergence probe rides the checkpoint's own job via
-      // observe() (r18: one action per round, not two) — labels only
-      // ever decrease, so an unchanged sum ⟺ a fixed point, exactly
-      // the old separate aggregate, now collected as a side metric
-      // of the materializing pass.
-      val obs = new org.apache.spark.sql.Observation()
-      val jumped = prop.as("m").join(prop.as("p"),
+      val (jumped, s) = observedSum(prop.as("m").join(prop.as("p"),
           col("m.lbl") === col("p.node"))
-        .select(col("m.node").as("node"), col("p.lbl").as("lbl"))
-        .observe(obs, sum(col("lbl").cast("decimal(38,0)")).as("s"))
-        .localCheckpoint(true)
-      val s = Option(obs.get("s").asInstanceOf[java.math.BigDecimal])
-        .getOrElse(java.math.BigDecimal.ZERO)
+        .select(col("m.node").as("node"), col("p.lbl").as("lbl")))
       converged = s.compareTo(prevSum) == 0
       prevSum = s
       labels = jumped

@@ -28,9 +28,13 @@ object PartitionedSink {
   /** Write `df` partitioned by `partitionCol`, then read the tree
     * back and return a per-partition summary (row count + key
     * checksum) — the round trip IS the verification that the sink
-    * preserved every row. The write records completion in the
-    * manifest (see below), so a later `resumeSummarize` can trust
-    * these partitions as landed.
+    * preserved every row. `df` is evaluated exactly once (the write):
+    * the summary is computed once and materialized, and the
+    * completion manifest (see below) is written from ITS partition
+    * values — a static overwrite replaces the whole tree, so the
+    * tree's values are exactly `df`'s, and taking them from `df`
+    * instead would recompute its whole lineage. A later
+    * `resumeSummarize` can then trust these partitions as landed.
     */
   def writeAndSummarize(df: DataFrame, partitionCol: String,
       checksumCol: String, outDir: String,
@@ -38,9 +42,16 @@ object PartitionedSink {
       writersPerPartition: Int = 4): DataFrame = {
     write(df, partitionCol, checksumCol, outDir, maxRecordsPerFile,
       writersPerPartition, SaveMode.Overwrite)
-    commitManifest(df, partitionCol, outDir)
-    summarize(df.sparkSession.read.parquet(outDir), partitionCol,
-      checksumCol)
+    val spark = df.sparkSession
+    // read with `df`'s schema: the partition values come back with
+    // `df`'s types, never re-inferred from the directory names
+    val tree = summarize(spark.read.schema(df.schema).parquet(outDir),
+      partitionCol, checksumCol)
+    // one row per partition value: small enough to collect
+    val summary = spark.createDataFrame(
+      java.util.Arrays.asList(tree.collect(): _*), tree.schema)
+    commitManifest(summary.select(col(partitionCol)), outDir)
+    summary
   }
 
   /** Completion manifest: one row per partition VALUE whose data has
@@ -58,9 +69,8 @@ object PartitionedSink {
   private def manifestDir(outDir: String): String =
     s"$outDir/_graft_manifest"
 
-  private def commitManifest(df: DataFrame, partitionCol: String,
-      outDir: String): Unit =
-    df.select(col(partitionCol)).distinct()
+  private def commitManifest(values: DataFrame, outDir: String): Unit =
+    values.coalesce(1) // a handful of values: one small file per commit
       .write.mode(SaveMode.Append).parquet(manifestDir(outDir))
 
   /** Values with a completion record; schema borrowed from `pending`
@@ -136,7 +146,11 @@ object PartitionedSink {
     val delta = pending.join(landed, Seq(partitionCol), "left_anti")
     write(delta, partitionCol, checksumCol, outDir, 5000000L,
       writersPerPartition, SaveMode.Overwrite, dynamic = true)
-    commitManifest(delta, partitionCol, outDir)
+    // completion comes from the delta, never from the tree: a dynamic
+    // overwrite leaves directories it did not write in place, so a
+    // stale partial directory whose value is not pending would read
+    // as landed
+    commitManifest(delta.select(col(partitionCol)).distinct(), outDir)
     summarize(spark.read.parquet(outDir), partitionCol, checksumCol)
   }
 
@@ -184,7 +198,7 @@ object PartitionedSink {
     val fs = mPath.getFileSystem(
       orders.sparkSession.sessionState.newHadoopConf())
     if (fs.exists(mPath)) fs.delete(mPath, true)
-    commitManifest(prior, "o_orderpriority", dir)
+    commitManifest(prior.select(col("o_orderpriority")).distinct(), dir)
     resumeSummarize(orders, "o_orderpriority", "o_orderkey", dir)
   }
 }

@@ -1,18 +1,22 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** p14 build-phase decomposition (r18 optimization round): PhaseProbe
-  * reads p14 as build=4.4 s / write=1.7 s — the checkpointed
-  * buildSplitTable owns the build. This splits it into the pipeline's
-  * stages, each materialized via noop on top of the previous stage's
-  * checkpoint so a stage pays only its own cost:
+  * reads p14 as build=4.4 s / write=1.7 s — the checkpointed split
+  * table owns the build. This splits it into the pipeline's stages,
+  * each a call into the SHIPPED stage functions over the shipped
+  * once-materialized dedup sets (Corpus.withDedupSets), so the probe
+  * cannot time a copy that drifts from trainingBuild (ADVICE r18 #2).
+  * Each stage is materialized on top of the previous one, so a stage
+  * pays only its own cost:
   *   sets    — quality scan + shingle digests + exact-dedup window
+  *             and their checkpoint
   *   pairs   — d04 candidate pipeline over the sets
   *   groups  — d07 label loop over the pairs
   *   split   — anti-join + salted split + the localCheckpoint itself
-  *   tail    — trainingBuildFrom (mixture/packing/rollup, the write)
+  *   build   — trainingBuild (all of the above, as shipped)
+  *   full    — build + the mixture/packing/rollup tail (noop write)
   *
   *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
   *     sbt 'runMain graft.tools.P14Probe [reps]'
@@ -35,10 +39,12 @@ object P14Probe {
     spark.sparkContext.setLogLevel("ERROR")
     import graft.operators.{Corpus, Dedup}
 
+    def report(label: String, t0: Long): Unit =
+      println(f"P14: $label ${(System.nanoTime() - t0) / 1e9}%.3f s")
     def time[T](label: String)(body: => T): T = {
       val t0 = System.nanoTime()
       val r = body
-      println(f"P14: $label ${(System.nanoTime() - t0) / 1e9}%.3f s")
+      report(label, t0)
       r
     }
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
@@ -48,31 +54,23 @@ object P14Probe {
 
     (0 until reps).foreach { r =>
       println(s"P14: === rep $r ===")
-      val sets = time("sets chk (scan+quality+shingles+exact window)") {
-        // the SHIPPED stage (Corpus.buildDedupSets, ADVICE r18 #2) —
-        // the probe can no longer drift from the registered query
-        Corpus.buildDedupSets(docs).localCheckpoint(true)
+      val t0 = System.nanoTime()
+      Corpus.withDedupSets(docs) { sets =>
+        report("sets chk (scan+quality+shingles+exact window)", t0)
+        val pairs = time("pairs chk (d04 pipeline)") {
+          Dedup.ngramJaccardFromSets(Corpus.fuzzyInput(sets))
+            .localCheckpoint(true)
+        }
+        val groups = time("groups (d07 loop)") { Dedup.dedupGroups(pairs) }
+        time("split chk (anti-join + salted split)") {
+          Corpus.splitTable(sets, groups).localCheckpoint(true)
+        }
       }
-      val pairs = time("pairs chk (d04 pipeline)") {
-        Dedup.ngramJaccardFromSets(
-          sets.filter(col("nsh") > 0).select(col("doc_id"), col("sh"),
-            col("nsh"))).localCheckpoint(true)
-      }
-      val groups = time("groups chk (d07 loop)") {
-        Dedup.dedupGroups(pairs).localCheckpoint(true)
-      }
-      time("split+anti (rest of buildSplitTable)") {
-        val dropped = groups.filter(col("doc_id") =!= col("cluster_rep"))
-          .select(col("doc_id"))
-        val kept = sets.select(col("doc_id"), col("source"),
-          col("n_tokens")).join(dropped, Seq("doc_id"), "left_anti")
-        noop(kept)
-      }
-      time("full buildSplitTable chk (registered shape)") {
-        graft.operators.Corpus.trainingBuild(docs) // builds + chk + plan
+      time("trainingBuild (sets + pairs + groups + split chk + plan)") {
+        Corpus.trainingBuild(docs)
       }
       time("p14 full (build+write)") {
-        noop(graft.operators.Corpus.trainingBuild(docs))
+        noop(Corpus.trainingBuild(docs))
       }
     }
     spark.stop()

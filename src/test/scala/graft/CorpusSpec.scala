@@ -612,35 +612,68 @@ class CorpusSpec extends AnyFunSuite {
   }
 
   test("p14: ONE corpus scan feeds clean, dedup, split, mixture, packing") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Walk extends AdaptiveSparkPlanHelper {
+      // every node, including the plans behind cached relations
+      def nodes(p: SparkPlan): Seq[SparkPlan] =
+        collectWithSubqueries(p) { case n => n }.flatMap {
+          case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+          case n => Seq(n)
+        }
+    }
+    def isDocs(s: FileSourceScanExec): Boolean =
+      s.relation.location.rootPaths.exists(_.toString.contains("documents"))
+    def readsText(s: FileSourceScanExec): Boolean =
+      s.requiredSchema.fieldNames.contains("text")
+    def docScans(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+      val plan = df.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==")(0)
+      plan.linesIterator
+        .filter(l => l.contains("Scan parquet") && l.contains("documents"))
+        .toSeq
+    }
+    val queries = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = queries.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = queries.add(qe)
+    }
     val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
     try {
-      def docScans(df: org.apache.spark.sql.DataFrame): Seq[String] = {
-        val plan = df.queryExecution.executedPlan.toString
-          .split("== Initial Plan ==")(0)
-        plan.linesIterator
-          .filter(l => l.contains("Scan parquet") && l.contains("documents"))
-          .toSeq
-      }
-      // the EXPENSIVE claim, asserted where the text pipeline now
-      // lives (r18: the split table materializes ONCE via
-      // localCheckpoint and the registered plan consumes the
-      // checkpoint): the split table's own plan reads text exactly
-      // once — quality, hash, shingles and token count all hang off
-      // that one scan
-      val split = Corpus.buildSplitTable(Tables.documents(spark, sf))
-      split.collect() // AQE reuse is decided at stage materialization
-      val sScans = docScans(split)
-      assert(sScans.count(_.contains("text")) === 1 && sScans.size === 1,
-        s"p14: the corpus TEXT pipeline must run exactly once in the " +
-          s"split-table build (found ${sScans.size} documents scans, " +
-          s"${sScans.count(_.contains("text"))} reading text):\n" +
-          split.queryExecution.executedPlan)
+      // the EXPENSIVE claim, at execution level: over every query the
+      // build and its landing run (the dedup sets' consumers, the label
+      // loop, the split table's checkpoint, the write, the summary, the
+      // manifest), exactly one documents scan reads text — quality,
+      // hash, shingles and token count all hang off that one scan. A
+      // scan inside a cached relation is one node however many queries
+      // read the cache, so it counts once; a scan only planned, never
+      // run, reads no rows and does not count.
+      val df = Corpus.trainingBuild(Tables.documents(spark, sf))
+      graft.sources.PartitionedSink.writeAndSummarize(df, "split",
+        "n_copies", graft.Staging.dir("graft_p14_scan_spec_")).collect()
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+      val ran = scala.jdk.CollectionConverters.IterableHasAsScala(queries)
+        .asScala.toSeq
+        .flatMap(qe => Walk.nodes(qe.executedPlan))
+        .collect { case s: FileSourceScanExec if isDocs(s) && readsText(s) => s }
+        .filter(_.metrics.get("numOutputRows").exists(_.value > 0))
+      val textScans = ran.map(s => System.identityHashCode(s) -> s).toMap.values
+      assert(queries.size > 1 && textScans.size === 1,
+        s"p14: the corpus TEXT pipeline must run exactly once per build " +
+          s"(${queries.size} queries ran ${textScans.size} text scans):\n" +
+          textScans.mkString("\n"))
       // and the registered plan is TRUNCATED: downstream re-reads the
       // checkpoint, never the corpus text; the packing stage's
       // bucket-bound branch keeps at most one scan, column-pruned to
       // (source, doc_id) key metadata
-      val df = Corpus.trainingBuild(Tables.documents(spark, sf))
       df.collect()
       val scanLines = docScans(df)
       assert(scanLines.count(_.contains("text")) === 0,
@@ -651,7 +684,10 @@ class CorpusSpec extends AnyFunSuite {
         s"p14: at most one pruned metadata scan downstream of the " +
           s"checkpoint (found ${scanLines.size}):\n" +
           df.queryExecution.executedPlan)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    }
   }
 
   test("p15: scores replay exactly against a BigInt in-memory reference") {

@@ -109,4 +109,49 @@ class PartitionedSinkSpec extends AnyFunSuite {
       "the truncated partition must be recomputed whole — its partial " +
         "rows neither trusted (row loss) nor appended to (row doubling)")
   }
+
+  test("k01: the input is evaluated once; the manifest holds the landed values") {
+    val orders = Tables.orders(spark, sf)
+    val out = graft.Staging.dir("graft_sink_once_")
+    // every row the input produces passes through this UDF once per
+    // evaluation of the input
+    val rows = spark.sparkContext.longAccumulator("sink_input_rows")
+    val tag = udf { (p: String) => rows.add(1L); p }.asNondeterministic()
+    val summary = PartitionedSink.writeAndSummarize(
+      orders.withColumn("o_orderpriority", tag(col("o_orderpriority"))),
+      "o_orderpriority", "o_orderkey", out).collect()
+    assert(rows.value === orders.count(),
+      "writeAndSummarize must evaluate its input once (the write), " +
+        "not again for the completion manifest")
+    val landed = spark.read.parquet(out).select("o_orderpriority")
+      .distinct().collect().map(_.getString(0)).toSeq.sorted
+    val manifest = spark.read.parquet(out + "/_graft_manifest")
+      .collect().map(_.getString(0)).toSeq.sorted
+    assert(manifest === landed,
+      "one completion record per landed partition value, no other")
+    assert(summary.map(_.getString(0)).toSeq.sorted === landed)
+  }
+
+  test("q22: resume records no completion for a stale value it was not given") {
+    val orders = Tables.orders(spark, sf)
+    val out = graft.Staging.dir("graft_resume_stale_")
+    PartitionedSink.writeAndSummarize(
+      orders.filter(col("o_orderpriority") < "3"),
+      "o_orderpriority", "o_orderkey", out).collect()
+    // a crashed writer left a partial 3-MEDIUM directory, and this
+    // resume is not asked for 3-MEDIUM at all: the directory is in the
+    // tree, but nothing completed it
+    orders.filter(col("o_orderpriority") === "3-MEDIUM")
+      .limit(7).drop("o_orderpriority")
+      .write.parquet(out + "/o_orderpriority=3-MEDIUM")
+    val pending = orders.filter(col("o_orderpriority") =!= "3-MEDIUM")
+    PartitionedSink.resumeSummarize(
+      pending, "o_orderpriority", "o_orderkey", out).collect()
+    val manifest = spark.read.parquet(out + "/_graft_manifest")
+      .collect().map(_.getString(0)).toSet
+    assert(!manifest.contains("3-MEDIUM"),
+      "a partial directory must never gain a completion record")
+    assert(manifest === pending.select("o_orderpriority").distinct()
+      .collect().map(_.getString(0)).toSet)
+  }
 }
