@@ -1,9 +1,9 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.TextOps
 
@@ -1007,53 +1007,67 @@ object Corpus {
     // non-fault-tolerant (one executor loss kills the job with no
     // lineage to recompute — guide §5). Production therefore sets a
     // RELIABLE checkpoint dir (sparkContext.setCheckpointDir on the
-    // job's scratch FS) and this branch takes it automatically:
+    // job's scratch FS) and `checkpointed` takes it automatically:
     // checkpoint() writes the table once to the checkpoint FS and
     // frees executor memory, surviving executor loss. Without a
     // configured dir (the local bench) localCheckpoint keeps the r18
     // behavior — eager, MEMORY_AND_DISK, per-run. Either way the
     // plan truncation (the optimization) is identical. The dedup sets
-    // (which carry the shingle arrays) are released right after the
-    // checkpoint, so they are not pinned through the tail.
+    // (one row per document, with the shingle arrays) take the same
+    // posture and are released — blocks or checkpoint files — right
+    // after the split table is checkpointed, so they are not pinned
+    // through the tail.
     val withSplit = withDedupSets(documents) { sets =>
       val groups = Dedup.dedupGroups(
         Dedup.ngramJaccardFromSets(fuzzyInput(sets)))
-      val split0 = splitTable(sets, groups)
-      if (documents.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        split0.checkpoint(true)
-      else split0.localCheckpoint(true)
+      checkpointed(splitTable(sets, groups))
     }
     trainingBuildFrom(withSplit, documents)
   }
 
   /** Runs `body` over the build's dedup sets (buildDedupSets), computed
-    * ONCE however many times `body` reads them: they are materialized
-    * up front (an eager localCheckpoint) and their blocks are released
-    * when `body` returns, so `body` must materialize whatever it
-    * derives from them. Recomputed instead, each consumer — the fuzzy
-    * pair pipeline inside dedupGroups' eager edge checkpoint, then the
-    * split table's anti-join — would rerun the scan, the quality
-    * regexes, the shingle digests and the exact-dedup window. A
-    * checkpoint rather than persist(): every read of a persisted
-    * relation is its own adaptive cache stage, so the pair pipeline's
-    * four reads of the sets (two union arms × two self-join sides)
-    * would stop sharing their one posting exchange. Sets a caller has
-    * already cached under the same plan are used as they are, neither
-    * checkpointed nor released here.
+    * ONCE however many times `body` reads them: they are checkpointed
+    * up front (`checkpointed`) and released when `body` returns, so
+    * `body` must materialize whatever it derives from them.
+    * Recomputed instead, each consumer — the fuzzy pair pipeline
+    * inside dedupGroups' eager edge checkpoint, then the split
+    * table's anti-join — would rerun the scan, the quality regexes,
+    * the shingle digests and the exact-dedup window. A checkpoint
+    * rather than persist(): every read of a persisted relation is its
+    * own adaptive cache stage, so the pair pipeline's four reads of
+    * the sets (two union arms × two self-join sides) would stop
+    * sharing their one posting exchange.
     */
   private[graft] def withDedupSets[T](documents: DataFrame)(
       body: DataFrame => T): T = {
-    val sets = buildDedupSets(documents)
-    if (sets.storageLevel != StorageLevel.NONE) body(sets)
-    else {
-      val done = sets.localCheckpoint(true)
-      try body(done)
-      finally done.queryExecution.logical.foreach {
-        case r: LogicalRDD => r.rdd.unpersist(blocking = true)
-        case _ =>
-      }
-    }
+    val sets = checkpointed(buildDedupSets(documents))
+    try body(sets) finally release(sets)
   }
+
+  /** `df` eagerly checkpointed, its plan truncated: written to the
+    * session's reliable checkpoint dir when one is set (it survives
+    * executor loss), otherwise a localCheckpoint (blocks on the
+    * executors, MEMORY_AND_DISK).
+    */
+  private[graft] def checkpointed(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+      df.checkpoint(true)
+    else df.localCheckpoint(true)
+
+  /** Frees what `checkpointed` stored for `done`: its blocks, and for a
+    * reliable checkpoint its files.
+    */
+  private def release(done: DataFrame): Unit =
+    done.queryExecution.logical.foreach {
+      case r: LogicalRDD =>
+        r.rdd.unpersist(blocking = true)
+        r.rdd.getCheckpointFile.foreach { f =>
+          val path = new Path(f)
+          path.getFileSystem(done.sparkSession.sessionState.newHadoopConf())
+            .delete(path, true)
+        }
+      case _ =>
+    }
 
   /** The fuzzy layer's input: the sets' documents with at least one
     * shingle, (doc_id, sh, nsh) — what ngramJaccardFromSets reads.

@@ -50,7 +50,7 @@ object PartitionedSink {
     // one row per partition value: small enough to collect
     val summary = spark.createDataFrame(
       java.util.Arrays.asList(tree.collect(): _*), tree.schema)
-    commitManifest(summary.select(col(partitionCol)), outDir)
+    commitManifest(summary, partitionCol, outDir)
     summary
   }
 
@@ -69,8 +69,10 @@ object PartitionedSink {
   private def manifestDir(outDir: String): String =
     s"$outDir/_graft_manifest"
 
-  private def commitManifest(values: DataFrame, outDir: String): Unit =
-    values.coalesce(1) // a handful of values: one small file per commit
+  private def commitManifest(df: DataFrame, partitionCol: String,
+      outDir: String): Unit =
+    df.select(col(partitionCol)).distinct()
+      .coalesce(1) // a handful of values: one small file per commit
       .write.mode(SaveMode.Append).parquet(manifestDir(outDir))
 
   /** Values with a completion record; schema borrowed from `pending`
@@ -150,7 +152,7 @@ object PartitionedSink {
     // overwrite leaves directories it did not write in place, so a
     // stale partial directory whose value is not pending would read
     // as landed
-    commitManifest(delta.select(col(partitionCol)).distinct(), outDir)
+    commitManifest(delta, partitionCol, outDir)
     summarize(spark.read.parquet(outDir), partitionCol, checksumCol)
   }
 
@@ -198,7 +200,7 @@ object PartitionedSink {
     val fs = mPath.getFileSystem(
       orders.sparkSession.sessionState.newHadoopConf())
     if (fs.exists(mPath)) fs.delete(mPath, true)
-    commitManifest(prior.select(col("o_orderpriority")).distinct(), dir)
+    commitManifest(prior, "o_orderpriority", dir)
     resumeSummarize(orders, "o_orderpriority", "o_orderkey", dir)
   }
 }

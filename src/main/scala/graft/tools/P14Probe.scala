@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   *             and their checkpoint
   *   pairs   — d04 candidate pipeline over the sets
   *   groups  — d07 label loop over the pairs
-  *   split   — anti-join + salted split + the localCheckpoint itself
+  *   split   — anti-join + salted split + the checkpoint itself
   *   build   — trainingBuild (all of the above, as shipped)
   *   full    — build + the mixture/packing/rollup tail (noop write)
   *
@@ -63,7 +63,7 @@ object P14Probe {
         }
         val groups = time("groups (d07 loop)") { Dedup.dedupGroups(pairs) }
         time("split chk (anti-join + salted split)") {
-          Corpus.splitTable(sets, groups).localCheckpoint(true)
+          Corpus.checkpointed(Corpus.splitTable(sets, groups))
         }
       }
       time("trainingBuild (sets + pairs + groups + split chk + plan)") {

@@ -611,7 +611,10 @@ class CorpusSpec extends AnyFunSuite {
       "loose superset bounds must not change the prefix sums")
   }
 
-  test("p14: ONE corpus scan feeds clean, dedup, split, mixture, packing") {
+  /** The p14 one-scan claim, checked over one trainingBuild and its
+    * landing under the session's current checkpoint posture.
+    */
+  private def assertOneTextScan(): Unit = {
     import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -670,6 +673,12 @@ class CorpusSpec extends AnyFunSuite {
         s"p14: the corpus TEXT pipeline must run exactly once per build " +
           s"(${queries.size} queries ran ${textScans.size} text scans):\n" +
           textScans.mkString("\n"))
+      // one scan node, and it ran once: a node whose RDD is computed
+      // again by a second job (a recomputed checkpoint input) adds its
+      // rows to the same metric
+      assert(textScans.head.metrics("numOutputRows").value ===
+        Tables.documents(spark, sf).count(),
+        "p14: the one text scan must read the corpus exactly once")
       // and the registered plan is TRUNCATED: downstream re-reads the
       // checkpoint, never the corpus text; the packing stage's
       // bucket-bound branch keeps at most one scan, column-pruned to
@@ -688,6 +697,27 @@ class CorpusSpec extends AnyFunSuite {
       spark.listenerManager.unregister(listener)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     }
+  }
+
+  test("p14: ONE corpus scan feeds clean, dedup, split, mixture, packing") {
+    assertOneTextScan()
+  }
+
+  test("p14: ONE corpus scan under a reliable checkpoint dir; the sets' files are deleted") {
+    val dir = graft.Staging.dir("graft_p14_ckpt_")
+    org.apache.spark.WithCheckpointDir(spark.sparkContext, dir) {
+      assertOneTextScan()
+    }
+    // the dedup sets' checkpoint is deleted once the split table is
+    // checkpointed; the split table's own checkpoint is what is left
+    val w = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    val rddDirs = try scala.jdk.CollectionConverters.IteratorHasAsScala(
+        w.iterator).asScala
+      .filter(_.getFileName.toString.startsWith("rdd-")).toList
+    finally w.close()
+    assert(rddDirs.size === 1,
+      s"p14: one reliable checkpoint left per build (the split table): " +
+        rddDirs.mkString(", "))
   }
 
   test("p15: scores replay exactly against a BigInt in-memory reference") {
