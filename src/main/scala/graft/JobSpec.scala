@@ -115,10 +115,11 @@ object JobSpec {
           k = j.int("k", 5), queryStride = j.int("queryStride", 50),
           maxQueries = j.int("maxQueries",
             operators.Similarity.AnnMaxQueries)))),
-    // ANN recall/cost dials — the RecallProbe sweep's axes made
-    // caller-settable: a deployment picks its own knee. cacheKey is
-    // dial-scoped (see dialKey) so a re-run at new dials never reuses
-    // another config's memoized centroids/codebooks.
+    // ANN recall/cost dials — the round-13 dial sweep's axes
+    // (curves in the Similarity scaladoc) made caller-settable: a
+    // deployment picks its own knee. cacheKey is dial-scoped (see
+    // dialKey) so a re-run at new dials never reuses another config's
+    // memoized centroids/codebooks.
     "s02_ann_ivf" -> ((s, d, j) =>
       checked(j, "k", "queryStride", "nprobe", "kClusters", "lloydIters",
         "maxQueries")(
@@ -295,8 +296,8 @@ object JobSpec {
     // and the stateful operator's partition sizing — the three
     // numbers a deployment actually tunes.
     //
-    // statePartitions SIZING RULE (r16 verdict #8; measured by
-    // St18Probe at sf10: 8→18.6 s, 16→11.1 s, 32→20.2 s — the
+    // statePartitions SIZING RULE (r16 verdict #8; measured at sf10,
+    // recorded in BASELINE.md: 8→18.6 s, 16→11.1 s, 32→20.2 s — the
     // crossover is real and cuts BOTH ways): the symmetric join
     // keeps FOUR state stores per shuffle partition and commits a
     // delta file per store per micro-batch, so the per-batch cost is

@@ -2426,12 +2426,13 @@ object SparkEntry {
     // lossless-dial fetch must still equal exact brute force
     "st27_stream_ann_ingest" -> annExactSql(s"$annQueryPred AND nrm > 0"),
     // st26: the engine reads buffered join state off the checkpoint;
-    // the oracle replays the held set from the St26Probe-pinned
+    // the oracle replays the held set from the spec-pinned
     // watermark arithmetic: W = floor(min(side maxima)/1000)*1000 −
     // delay, click held iff ts+horizon ≥ W, purchase held iff ts ≥ W.
     // Null-ts rows never buffer (watermark column) and null-user
     // rows never buffer (inferred IsNotNull on the equi key) —
-    // planted-probe-pinned, so the ev CTE filters both.
+    // pinned by St26JoinStateCensusSpec's planted rows, so the ev
+    // CTE filters both.
     "st26_join_state_census" ->
       """WITH ev AS (
            SELECT event_type, user_id, epoch_us(ts) AS ts_us
@@ -4028,7 +4029,7 @@ object SparkEntry {
          UNION ALL SELECT 'stopwords', f_stopwords FROM f
          UNION ALL SELECT '__kept__', kept FROM f""",
     // st24: the held/fired split is exact integer arithmetic
-    // (probe-pinned): final watermark = floor(max_us/1000) ms at 0 s
+    // (spec-pinned): final watermark = floor(max_us/1000) ms at 0 s
     // delay, a timer fires iff expiry ms <= watermark, expiry =
     // (last_us+gap_us)/1000+1 — so the open set is every user whose
     // last event leaves its session-expiry strictly past the

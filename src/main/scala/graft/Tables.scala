@@ -27,7 +27,7 @@ object Tables {
 
   /** events.parquet carries TIMESTAMP(NANOS), which Spark's vectorized
     * reader only accepts as a raw long (spark.sql.legacy.parquet
-    * .nanosAsLong=true — set by Verify/Bench/specs). Normalize to a
+    * .nanosAsLong=true — set by Verify/perfbench/specs). Normalize to a
     * proper TimestampType at microsecond precision so operators stay
     * type-uniform. Integer DIV, not double division: epoch-ns
     * (~1.7e18) exceeds double's 2^53 exact-integer range.

@@ -86,7 +86,4 @@ object PortableHash {
     */
   def permA(i: Int): Long = md5_60(s"graft-minhash-a-$i") % (M - 1) + 1
   def permB(i: Int): Long = md5_60(s"graft-minhash-b-$i") % M
-
-  /** perm_i applied to an md5_60 digest (reduces into M first). */
-  def perm(a: Long, b: Long, x: Long): Long = (a * (x % M) + b) % M
 }

@@ -1038,7 +1038,7 @@ object Corpus {
     * the sets (two union arms × two self-join sides) would stop
     * sharing their one posting exchange.
     */
-  private[graft] def withDedupSets[T](documents: DataFrame)(
+  private def withDedupSets[T](documents: DataFrame)(
       body: DataFrame => T): T = {
     val sets = checkpointed(buildDedupSets(documents))
     try body(sets) finally release(sets)
@@ -1072,7 +1072,7 @@ object Corpus {
   /** The fuzzy layer's input: the sets' documents with at least one
     * shingle, (doc_id, sh, nsh) — what ngramJaccardFromSets reads.
     */
-  private[graft] def fuzzyInput(sets: DataFrame): DataFrame =
+  private def fuzzyInput(sets: DataFrame): DataFrame =
     sets.filter(col("nsh") > 0).select(col("doc_id"), col("sh"), col("nsh"))
 
   /** The cleaned → exact-deduped → fuzzy-deduped → split doc table
@@ -1083,7 +1083,7 @@ object Corpus {
     * the pair pipeline's), which is why trainingBuild materializes
     * them first (withDedupSets).
     */
-  private[graft] def splitTable(sets: DataFrame,
+  private def splitTable(sets: DataFrame,
       groups: DataFrame): DataFrame = {
     val dropped = groups.filter(col("doc_id") =!= col("cluster_rep"))
       .select(col("doc_id"))
@@ -1102,9 +1102,8 @@ object Corpus {
     * immediately after the projection), then the exact layer's
     * min-id-survivor window per normalized-text hash (p03's recipe).
     * UN-materialized: trainingBuild runs it once per build through
-    * withDedupSets. Its own function (ADVICE r18 #2) so P14Probe's
-    * stage decomposition times the SHIPPED stage, never a replica
-    * that could silently drift from the registered query.
+    * withDedupSets. Its own function because withDedupSets and
+    * perfbench's traced pass call this shipped stage.
     */
   private[graft] def buildDedupSets(documents: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window

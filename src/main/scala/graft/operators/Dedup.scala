@@ -70,7 +70,7 @@ object Dedup {
     * push the whole shingle expression into the filter and evaluate
     * it twice per row.
     */
-  private[graft] def shingleSets(documents: DataFrame, n: Int,
+  private def shingleSets(documents: DataFrame, n: Int,
       portable: Boolean = false): DataFrame =
     documents
       .filter(size(TextOps.tokens(col("text"))) >= n)
@@ -1110,8 +1110,9 @@ object Dedup {
     * learned-block count is max(1, ⌈n / D08BlockTarget⌉), keeping
     * expected block occupancy ≈ blockTarget so pair space Σ block²
     * ≈ n·blockTarget grows LINEARLY with the corpus. 2000 reproduces
-    * D08Probe's measured-healthy dial at sf10 (200k vectors → k=100,
-    * 14.2 s) and lands the old production dial at sf1 (20k → k=10).
+    * the measured-healthy dial at sf10 (200k vectors → k=100, 14.2 s;
+    * SURVEY.md, round 17) and lands the old production dial at sf1
+    * (20k → k=10).
     */
   val D08BlockTarget: Int = 2000
 
@@ -1152,11 +1153,11 @@ object Dedup {
     *
     * The PRODUCTION dial sizes kClusters from the corpus (VERDICT
     * r17 #2 — kClusters ≤ 0 = auto = max(1, ⌈n / blockTarget⌉) off
-    * a cheap count): D08Probe measured the mis-sizing cliff at sf10
-    * (fixed k=10 reads 216 s, corpus-sized k=100 reads 14.2 s), so
-    * the sizing rule is now the DEFAULT, not scaladoc prose. The
-    * fixed dial stays reachable (explicit kClusters / JobSpec), and
-    * the planted-dup spec pins the auto dial.
+    * a cheap count): measured at sf10, fixed k=10 reads 216 s and
+    * corpus-sized k=100 reads 14.2 s (SURVEY.md), so the sizing
+    * rule is now the DEFAULT, not scaladoc prose. The fixed dial
+    * stays reachable (explicit kClusters / JobSpec), and the
+    * planted-dup spec pins the auto dial.
     */
   def dedupEmbeddingAuto(embeddings: DataFrame, tau: Double = 0.4,
       kClusters: Int = 0, iters: Int = 3,
@@ -1356,7 +1357,7 @@ object Dedup {
     // post-join filter: written as `withColumn(d).filter(d >= 0)`,
     // Catalyst pushes the filter into the join AHEAD of the cheap
     // band conjuncts and every same-bucket pair pays the DP
-    // (measured at sf1: 65.3 s vs 9.8 s — the D17Probe numbers).
+    // (measured at sf1: 65.3 s vs 9.8 s; BASELINE.md, round 16).
     // Condition order short-circuits, so only band survivors reach
     // the DP; the projection recomputes the distance for the tiny
     // survivor set (thousands of rows — two DP calls each, both

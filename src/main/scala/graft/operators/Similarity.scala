@@ -268,8 +268,9 @@ object Similarity {
     * corpus here, a ratio that FALLS with corpus size at fixed
     * bucket target), (4,16)→0.92, (4,24)→0.98.
     *
-    * WHERE LSH PAYS (r16 verdict #4, measured — S03ClusteredProbe,
-    * 200k planted-clustered corpus, s01 brute force 177 s): on
+    * WHERE LSH PAYS (r16 verdict #4, measured in
+    * CLUSTERED_PROBE_r17.txt — 200k planted-clustered corpus, s01
+    * brute force 177 s): on
     * CLUSTERED embeddings the sizing rule above delivers — (8,16)
     * recall 0.99 at 35 s, (11,16) 0.90 at 17 s — because co-bucketing
     * tracks genuine angular proximity. On the NEAR-RANDOM driver
@@ -346,7 +347,7 @@ object Similarity {
     * bucket join → candidate dedup → vector rejoin → rerank → topK)
     * under the hard gate; the production approximate dials stay
     * measured by RECALL_r{N}.json on BOTH corpora (near-random 0.78,
-    * clustered 1.0) and costed by S03ClusteredProbe.
+    * clustered 1.0) and costed in CLUSTERED_PROBE_r18.txt.
     */
   def annLshExactDial(embeddings: DataFrame): DataFrame =
     annLsh(embeddings, nBits = 0, tables = 1)
@@ -789,8 +790,8 @@ object Similarity {
     * annExactSql, the same one s06/k31/st27 carry). This puts the
     * pure-IVF code path (learned quantizer → probe → cluster-hash
     * join → topK) under the HARD correctness gate; the production
-    * approximate dial (nprobe=3) stays measured by the per-round
-    * RecallProbe sweep and the recall-monotonicity spec.
+    * approximate dial (nprobe=3) stays measured by RECALL_r{N}.json
+    * and the recall-monotonicity spec.
     *
     * Definedness: a zero-norm query has no cosine (cosineFrom is
     * NULL-on-zero) — the ADC family drops such queries at the
@@ -813,8 +814,7 @@ object Similarity {
     * included) — the full PQ path (codebook → codes → ADC kernel →
     * shard/global rank → exact rerank) becomes a hash-checked oracle
     * row. The production approximate dial (rerankDepth=64) stays
-    * measured by RecallProbe's depth sweep and the
-    * recall-vs-depth spec.
+    * measured by RECALL_r{N}.json and the recall-vs-depth spec.
     */
   def annPqExactDial(embeddings: DataFrame,
       cacheKey: String = ""): DataFrame =

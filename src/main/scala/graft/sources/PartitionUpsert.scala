@@ -312,9 +312,7 @@ object PartitionUpsert {
     affected
   }
 
-  /** The convergent merge PLAN — factored out so the body-plan dump
-    * and any probe exercise the exact shipped plan, never a replica
-    * that could drift (ADVICE r18 #2's lesson). Max-seq wins per
+  /** The convergent merge PLAN. Max-seq wins per
     * (doc_id, lang), tombstones persist, `<=>` on the lang key
     * (mergeLatest's null-safety note). Strategy: full-outer SHUFFLED
     * HASH join built from the delta side (r19, guide §3.1 — see
@@ -324,7 +322,7 @@ object PartitionUpsert {
     * hash table fits by construction and the base slice streams
     * through unsorted).
     */
-  private[graft] def convergentMerge(base: DataFrame,
+  private def convergentMerge(base: DataFrame,
       incoming: DataFrame): DataFrame =
     base.join(incoming.hint("shuffle_hash"),
         col("doc_id") === col("in_id") &&

@@ -201,7 +201,7 @@ object ZoneMapIndex {
     */
   private[graft] val LandTargetBytes: Long = 8L << 20
 
-  private[graft] def landClustered(slice: DataFrame, target: String,
+  private def landClustered(slice: DataFrame, target: String,
       bounds: (Long, Long, Long, Long),
       adaptiveWidth: Boolean = false): Unit = {
     val (uLo, uHi, bLo, bHi) = bounds

@@ -40,30 +40,16 @@ object StreamOps {
     * same logic — fewer, fuller micro-batches amortize the engine's
     * per-batch floor.
     *
-    * Env-overridable (GRAFT_HARNESS_FILES_PER_TRIGGER) for the
-    * HarnessFloorProbe ONLY — the probe re-runs st18/st19 at 1 file
-    * per trigger vs all-at-once to split per-trigger fixed cost from
-    * plan cost (r15 verdict #8); every registered/benched run uses
-    * the default 2.
+    * Measured at sf0.1 (r15, BASELINE.md "Streaming harness FLOOR"):
+    * st18/st19 at 1 / 2 / 8 files per trigger read 16.10 / 3.85 /
+    * 3.60 s and 7.25 / 4.83 / 2.84 s, so the 2-file harness pays
+    * +0.25 s / +2.0 s of per-trigger cost to stay multi-batch.
     */
-  /** True when the probe-only override is present in the environment
-    * — Verify/Bench REFUSE to run under it (ADVICE r16 #2: a stray
-    * env var must not silently change every registered/benched run's
-    * micro-batch count).
-    */
+  private val HarnessFilesPerTrigger = 2
+
+  /** Read only by perfbench's Main, which refuses to run when set. */
   val HarnessFilesPerTriggerOverridden: Boolean =
     sys.env.contains("GRAFT_HARNESS_FILES_PER_TRIGGER")
-
-  private val HarnessFilesPerTrigger =
-    sys.env.get("GRAFT_HARNESS_FILES_PER_TRIGGER") match {
-      case None => 2
-      case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(
-        // fail fast with a named message instead of an opaque
-        // ExceptionInInitializerError at first StreamOps use
-        throw new IllegalArgumentException(
-          s"GRAFT_HARNESS_FILES_PER_TRIGGER must be a positive " +
-            s"integer (probe-only override), got: '$v'"))
-    }
 
   /** Event after timestamp normalization (epoch micros). */
   final case class Ev(user_id: Long, event_id: Long, ts_us: Long, value: Double)
@@ -1384,14 +1370,14 @@ object StreamOps {
     * default. The JobSpec sizing rule (JobSpec.scala statePartitions
     * note) applies: per-batch floor ∝ stores × batches, so size to
     * per-batch core need, not to the session's scan parallelism.
-    * Measured this round (BatchBodyProbe, sf0.1): the st01-shaped
-    * windowed aggregation reads 2.72 s at the inherited 32 vs 1.71 s
-    * at 8 — pure state-commit floor, the same 3× per-store effect
-    * the r13 St18Probe measured for the join twins. The dial stays a
-    * parameter with the st18/st19 default (8); a 100 TB deployment
-    * sizes it to its executor cores (the St18Probe sf10 crossover:
-    * 8→18.6 s, 16→11.1 s, 32→20.2 s — undersizing punishes large
-    * scale, oversizing punishes the floor).
+    * Measured in r18 at sf0.1 (OPTIMIZATION_r18.md, Batch 1): the
+    * st01-shaped windowed aggregation reads 2.72 s at the inherited
+    * 32 vs 1.71 s at 8 — pure state-commit floor, the same 3×
+    * per-store effect r13 measured for the join twins. The dial stays
+    * a parameter with the st18/st19 default (8); a 100 TB deployment
+    * sizes it to its executor cores (the sf10 crossover in the same
+    * record: 8→18.6 s, 16→11.1 s, 32→20.2 s — undersizing punishes
+    * large scale, oversizing punishes the floor).
     */
   private def runSizedStream(spark: SparkSession,
       mk: SparkSession => DataFrame, sinkPrefix: String,
@@ -1409,7 +1395,8 @@ object StreamOps {
     // after). NOT safe for watermark-EMITTING operators (outer join
     // null rows, event-time timeouts, append-mode aggregates) — those
     // keep the default. Measured r18: one fewer full trigger (~1/3 of
-    // st18's floor); row set proven identical (St18ConfProbe + spec).
+    // st18's floor); row set proven identical (StreamOpsSpec's
+    // stream ≡ batch join; OPTIMIZATION_r18.md, Batch 4).
     if (!noDataBatches)
       child.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
         "false")
@@ -1800,7 +1787,7 @@ object StreamOps {
     * frozen for inspection. Memoized per dial set (the checkpoint is
     * the artifact st24 reads).
     */
-  private[graft] def openSessionCheckpoint(spark: SparkSession,
+  private def openSessionCheckpoint(spark: SparkSession,
       dir: String, gapSeconds: Long, statePartitions: Int): String =
     stagedOpenSessionCkpt.getOrElseUpdate(
       s"$dir|$gapSeconds|$statePartitions",
@@ -1863,9 +1850,10 @@ object StreamOps {
     * would show.
     *
     * The census is oracle-checkable because the held/fired split is
-    * pure arithmetic (probe-pinned, St24Probe + planted spec): the
-    * final watermark is floor(max_event_us/1000) ms (0 s delay), a
-    * timer fires iff its expiry ms ≤ that watermark, and the
+    * pure arithmetic (pinned by St24StateCensusSpec's planted
+    * boundary users): the final watermark is
+    * floor(max_event_us/1000) ms (0 s delay), a timer fires iff its
+    * expiry ms ≤ that watermark, and the
     * processor registers expiry = (last_us+gap_us)/1000+1 — so a
     * user is HELD iff (last_us+gap_us)/1000+1 > max_us/1000, i.e.
     * the users whose session the corpus end leaves genuinely open.
@@ -1900,7 +1888,7 @@ object StreamOps {
     * any instant — frozen for st26's census. Memoized per dial set
     * (the checkpoint is the artifact, st24's discipline).
     */
-  private[graft] def joinStateCheckpoint(spark: SparkSession,
+  private def joinStateCheckpoint(spark: SparkSession,
       dir: String, horizonHours: Long = 24L, delay: String = "1 hour",
       clickType: String = "click", purchaseType: String = "purchase",
       statePartitions: Int = 8): String =
@@ -1936,8 +1924,10 @@ object StreamOps {
     * event-time span.
     *
     * Oracle-checkable because the held set is pure watermark
-    * arithmetic, St26Probe-pinned on three corpora (sf0.001, sf0.01
-    * — which gate on OPPOSITE sides — and hostile): each
+    * arithmetic, checked on three corpora (sf0.001 by
+    * St26JoinStateCensusSpec; sf0.01 — which gates on the OPPOSITE
+    * side — and hostile by the oracle, CORRECTNESS_r18.json and
+    * CORRECTNESS_hostile_r18.json): each
     * withWatermark node tracks ITS OWN max event time (ms-floored),
     * so the global watermark of the final eviction is
     * W = floor(min(max_click_us, max_purchase_us)/1000)·1000 −
@@ -1952,8 +1942,9 @@ object StreamOps {
     * events table. NULL-ts rows never buffer (the watermark column
     * drops them); NULL-user rows never buffer either — the inner
     * join's inferred IsNotNull on the equi key filters them before
-    * the state store (planted-probe-pinned, St26Planted) — so the
-    * oracle's held sets carry `user_id IS NOT NULL` too.
+    * the state store (pinned by St26JoinStateCensusSpec's planted
+    * rows) — so the oracle's held sets carry `user_id IS NOT NULL`
+    * too.
     *
     * Scale: the read is partition-parallel over the stores' own
     * layout, touches the last committed snapshot only, and the

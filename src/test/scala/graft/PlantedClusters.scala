@@ -1,11 +1,11 @@
-package graft.tools
+package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deterministic planted-CLUSTERED embeddings (r16 verdict #4): the
-  * driver's embeddings table is near-random (recall curves and the
-  * s01/s03 cost crossover were only ever measured there), but real
+  * embeddings table is near-random (recall curves and the s01/s03
+  * cost crossover were only ever measured there), but real
   * corpus embeddings CLUSTER — text encoders map related documents
   * into tight cones. This generator plants exactly that geometry:
   * `k` Gaussian anchor directions, each vector = its anchor + σ·noise
@@ -16,12 +16,12 @@ import org.apache.spark.sql.functions._
   *
   * Fully hash-derived (xxhash64 → uniform → Box–Muller), no RNG
   * state: every cell is a pure function of (vec_id, component,
-  * salt), so the spec corpus and the probe corpus are the same
-  * distribution at any size, generation is one distributed
-  * projection (no driver loop, no shuffle), and reruns are
-  * bit-identical. Schema matches the driver's embeddings table
-  * (vec_id BIGINT, embedding ARRAY<FLOAT>, label INT — label = the
-  * planted cluster id, so recall accounting can see the structure).
+  * salt), so the corpus is the same distribution at any size,
+  * generation is one distributed projection (no driver loop, no
+  * shuffle), and reruns are bit-identical. Schema matches the
+  * embeddings table (vec_id BIGINT, embedding ARRAY<FLOAT>,
+  * label INT — label = the planted cluster id, so recall accounting
+  * can see the structure).
   */
 object PlantedClusters {
 
@@ -46,17 +46,4 @@ object PlantedClusters {
         (gauss(col("id") % k, j.cast("long"), 0xA11C0A11L) +
           lit(sigma) * gauss(col("id"), j.cast("long"), 0x9E3D59E3L))
           .cast("float")).as("embedding"))
-
-  /** Write a planted corpus next to nothing else so every probe run
-    * reads the same stable files (operator memos key on the dir).
-    */
-  def materialize(spark: SparkSession, dir: String, n: Long,
-      dim: Int = 64, k: Int = 10, sigma: Double = 0.5): DataFrame = {
-    val p = s"$dir/embeddings.parquet"
-    if (!new java.io.File(p).exists()) {
-      generate(spark, n, dim, k, sigma)
-        .repartition(32).write.mode("overwrite").parquet(p)
-    }
-    spark.read.parquet(p)
-  }
 }

@@ -27,7 +27,7 @@ class RecallArtifactSpec extends AnyFunSuite {
   // since r16, s02/s04 register their lossless anchors for the hash
   // gate (r15 verdict #6), and THIS artifact is what keeps the
   // approximate paths honestly measured.
-  // All four re-pinned r13 after the dial sweep (RecallProbe) moved
+  // All four re-pinned r13 after the round-13 dial sweep moved
   // the registered defaults to their cost/recall knees: IVF nprobe
   // 1→3 (0.28→0.72), LSH (nBits, tables) (6,8)→(5,16) (0.24→0.78),
   // PQ rerankDepth 32→64 (0.70→0.86), IVF-PQ (nprobe, rerankDepth)
@@ -38,8 +38,8 @@ class RecallArtifactSpec extends AnyFunSuite {
   // 50-vector corpus the sizing rule correctly lands nBits=1 (2
   // buckets/table ≈ brute force — pruning at toy scale would be
   // mis-sizing, which is the cliff auto removes). The old fixed
-  // (5,16) dial's 0.78 stays measured by RecallProbe's explicit
-  // sweep; the corpus-scale economics by S03ClusteredProbe.
+  // (5,16) dial's 0.78 is recorded in RECALL_r13.json; the
+  // corpus-scale economics in CLUSTERED_PROBE_r18.txt.
   private val pins = Map(
     "s02_ann_ivf" -> 0.72,
     "s03_ann_lsh" -> 1.0,
@@ -79,7 +79,7 @@ class RecallArtifactSpec extends AnyFunSuite {
     val clusteredPins = Map(
       "s02_ann_ivf" -> 1.0,
       "s03_ann_lsh" -> 1.0)
-    val ec = tools.PlantedClusters.generate(spark, 500L)
+    val ec = PlantedClusters.generate(spark, 500L)
       .localCheckpoint(true)
     val exactC = Similarity.annBruteForce(ec).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -9,7 +9,7 @@ import graft.streaming.StreamOps
   * sessionizer's checkpoint: the planted test pins the EXACT
   * timer-expiry boundary the oracle arithmetic encodes (floor-ms
   * watermark, fire iff expiry ≤ watermark, expiry = (last+gap)/1000+1
-  * — discovered by St24Probe, frozen here), on a multi-batch drain;
+  * — frozen here), on a multi-batch drain;
   * the corpus test pins census ≡ the independent batch derivation.
   */
 class St24StateCensusSpec extends AnyFunSuite {

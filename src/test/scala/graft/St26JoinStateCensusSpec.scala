@@ -12,14 +12,14 @@ class St26JoinStateCensusSpec extends AnyFunSuite {
     df.collect().map(r => r.getString(0) ->
       (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
 
-  /** The St26Probe-pinned batch derivation of the held sets: global
+  /** The batch derivation of the held sets: global
     * watermark = ms-floored min over sides of (side max − delay);
     * click held iff ts + horizon ≥ W, purchase held iff ts ≥ W.
     */
   private def derive(dir: String): Map[String, (Long, Long, Long, Long)] = {
     // raw parquet, not Tables.events: the census's stream reads raw
     // files, and the oracle's filters (ts/user not null) are the
-    // probe-pinned buffering contract, not loader behavior
+    // buffering contract the planted test pins, not loader behavior
     val ev = spark.read.parquet(s"$dir/events.parquet")
       .filter(col("ts").isNotNull && col("user_id").isNotNull)
       .select(col("event_type"), col("user_id"),
