@@ -207,6 +207,19 @@ object Corpus {
         max(col("doc_id")).as("last_doc"))
   }
 
+  /** t07's sequence count for one stratum as an aggregate, no window:
+    * `max(seq_id) + 1`, where `seq_id` is the EXCLUSIVE running sum of
+    * `nTokens` in `orderKey` order DIV `budget`. Invariant `nTokens ≥ 0`
+    * (p14's quality gate drops NULL text: it scores NULL), so the sum
+    * never decreases and the max is the last non-NULL row's: the
+    * stratum's sum minus that row's tokens. An all-NULL stratum gives
+    * NULL, as the window form does.
+    */
+  private[graft] def packedSeqCount(nTokens: String, orderKey: String,
+      budget: Long): Column =
+    expr(s"(sum($nTokens) - max_by($nTokens, CASE WHEN $nTokens IS NOT " +
+      s"NULL THEN $orderKey END)) DIV $budget + 1")
+
   /** The p05 recipe generalized: an EXCLUSIVE running sum of
     * `valueCol` over `orderCol` order WITHIN each stratum, without
     * ever funneling a stratum through one window task (the r15
@@ -980,9 +993,10 @@ object Corpus {
     * The mixture's rate table is a source-cardinality aggregate
     * broadcast back (p13's pass-1, here fed from the SAME scan
     * instead of a second one — composing the stages SAVES p13's
-    * second text scan, which is the capstone's point). Packing
-    * windows partition by (split, source, epoch); the final rollup
-    * is two algebraic hash aggregates on post-window cardinality.
+    * second text scan, which is the capstone's point); `documents`
+    * is read once. The rollup is two algebraic hash aggregates; the
+    * first counts each (split, source, epoch)'s packed sequences in
+    * closed form (packedSeqCount), so packing runs no window.
     */
   def trainingBuild(documents: DataFrame): DataFrame = {
     // One materialization of the cleaned/deduped/split doc table
@@ -1022,7 +1036,7 @@ object Corpus {
         Dedup.ngramJaccardFromSets(fuzzyInput(sets)))
       checkpointed(splitTable(sets, groups))
     }
-    trainingBuildFrom(withSplit, documents)
+    trainingBuildFrom(withSplit)
   }
 
   /** Runs `body` over the build's dedup sets (buildDedupSets), computed
@@ -1124,12 +1138,10 @@ object Corpus {
   }
 
   /** Everything downstream of the materialized split table: mixture,
-    * replication, packing, manifest rollup. `documents` supplies
-    * only the packing stage's LOOSE key bounds (a text-free
-    * (source, doc_id) scan).
+    * replication, packing, manifest rollup. It reads only the split
+    * table, never the corpus.
     */
-  private def trainingBuildFrom(withSplit: DataFrame,
-      documents: DataFrame): DataFrame = {
+  private def trainingBuildFrom(withSplit: DataFrame): DataFrame = {
     // mixture (train slice only): p13's integer rate derivation from
     // the CLEANED, DEDUPED train token mass — metadata-scale agg,
     // broadcast back
@@ -1163,28 +1175,14 @@ object Corpus {
     val heldOut = withSplit.filter(col("split") =!= "train")
       .select(col("doc_id"), col("source"), col("split"), col("n_tokens"),
         lit(0L).as("epoch"))
-    // packing (t07) per (split, source, epoch): strata pack
-    // independently, replicas of different epochs never share a
-    // sequence; the running sum is the hierarchical bucket-offset
-    // encoding (stratifiedPrefixSum), so no stratum funnels through
-    // one window task
-    // key bounds per SOURCE from the raw table (a superset of every
-    // (split, source, epoch) stratum's doc_id range — loose bounds
-    // keep the bucketization monotone), so the bounds branch prunes
-    // to a (source, doc_id) scan and the text pipeline runs ONCE
-    val packed = stratifiedPrefixSum(trainRep.unionByName(heldOut),
-        Seq("split", "source", "epoch"), "doc_id", "n_tokens",
-        "start_tok",
-        boundsSrc = Some((documents.select(col("source"), col("doc_id")),
-          Seq("source"))))
-      .withColumn("seq_id", expr(s"start_tok DIV $BuildBudgetTokens"))
-    // manifest rollup (k09 grain): two algebraic aggregates on
-    // post-window cardinality
-    packed
+    // packing (t07) per (split, source, epoch): replicas of different
+    // epochs never share a sequence. The manifest rollup (k09 grain)
+    // needs only each stratum's sequence count (packedSeqCount)
+    trainRep.unionByName(heldOut)
       .groupBy(col("split"), col("source"), col("epoch"))
       .agg(count(lit(1)).as("n_rows"),
         sum(col("n_tokens")).as("tok"),
-        (max(col("seq_id")) + 1).as("n_seq"),
+        packedSeqCount("n_tokens", "doc_id", BuildBudgetTokens).as("n_seq"),
         sum(col("doc_id")).as("ck"))
       .groupBy(col("split"), col("source"))
       .agg(

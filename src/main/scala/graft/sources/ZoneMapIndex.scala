@@ -180,27 +180,15 @@ object ZoneMapIndex {
       .write.mode(SaveMode.Overwrite).parquet(s"$tree/_zonemap/v$toV")
   }
 
-  /** Land one micro-batch as its own z-clustered immutable directory
-    * (idempotent overwrite of `b{batchId}` — the streaming family's
-    * replay convention) and publish the next manifest version covering
-    * exactly the files landed so far. Per-batch cost ∝ the BATCH, never
-    * the tree: the delta's stats come from scanning only `b{batchId}`,
-    * and the fold against v(toV−1) is metadata-cardinality. Batches
-    * z-cluster within themselves on the FIXED grid (`bounds` is the
-    * landing spec, set before the stream starts, exactly as production
-    * fixes quantization in the table spec) — clustering quality is
-    * per-batch rather than global, but manifest EXACTNESS (min/max per
-    * file → no false negatives) never depends on clustering at all.
-    */
-  /** The landing write shared by st17's micro-batches and k20's demo
-    * fragments: normalize, z-cluster WITHIN the slice on the fixed
-    * grid, land as an immutable directory (idempotent overwrite).
-    */
   /** Target bytes per landed file when the width is size-adaptive —
     * st17's micro-batches; see landClustered.
     */
   private[graft] val LandTargetBytes: Long = 8L << 20
 
+  /** The landing write shared by st17's micro-batches and k20's demo
+    * fragments: normalize, z-cluster WITHIN the slice on the fixed
+    * grid, land as an immutable directory (idempotent overwrite).
+    */
   private def landClustered(slice: DataFrame, target: String,
       bounds: (Long, Long, Long, Long),
       adaptiveWidth: Boolean = false): Unit = {
@@ -246,6 +234,18 @@ object ZoneMapIndex {
       .write.mode(SaveMode.Overwrite).parquet(target)
   }
 
+  /** Land one micro-batch as its own z-clustered immutable directory
+    * (idempotent overwrite of `b{batchId}` — the streaming family's
+    * replay convention) and publish the next manifest version covering
+    * exactly the files landed so far. Per-batch cost ∝ the BATCH, never
+    * the tree: the delta's stats come from scanning only `b{batchId}`,
+    * and the fold against v(toV−1) is metadata-cardinality. Batches
+    * z-cluster within themselves on the FIXED grid (`bounds` is the
+    * landing spec, set before the stream starts, exactly as production
+    * fixes quantization in the table spec) — clustering quality is
+    * per-batch rather than global, but manifest EXACTNESS (min/max per
+    * file → no false negatives) never depends on clustering at all.
+    */
   private[graft] def appendBatch(spark: SparkSession, tree: String,
       batch: DataFrame, batchId: Long,
       bounds: (Long, Long, Long, Long), toV: Long): Unit = {

@@ -611,6 +611,67 @@ class CorpusSpec extends AnyFunSuite {
       "loose superset bounds must not change the prefix sums")
   }
 
+  test("packedSeqCount ≡ max(flat exclusive prefix DIV budget) + 1 " +
+      "per stratum (NULL last rows, all-NULL, zero tokens, singletons, " +
+      "exact budget multiples)") {
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    val rnd = new scala.util.Random(14)
+    val b = 64L
+    def n(v: Long): java.lang.Long = java.lang.Long.valueOf(v)
+    // seeded random strata: 1..40 docs, 0..150 tokens, ~1 in 12 NULL
+    val random = (0 until 60).map { k =>
+      s"r$k" -> Seq.fill(1 + rnd.nextInt(40)) {
+        if (rnd.nextInt(12) == 0) null else n(rnd.nextInt(151).toLong)
+      }
+    }
+    val planted = Seq(
+      "null_last" -> Seq(n(50), n(40), n(30), null),
+      "null_tail" -> Seq(n(b), null, null),
+      "all_null" -> Seq[java.lang.Long](null, null, null),
+      "zeros" -> Seq(n(0), n(0), n(0)),
+      "zero_last" -> Seq(n(b), n(b), n(0)),
+      "single" -> Seq(n(3 * b + 5)),
+      "single_zero" -> Seq(n(0)),
+      "single_null" -> Seq[java.lang.Long](null),
+      "exact_multiples" -> Seq(n(b), n(b), n(b / 2), n(b / 2), n(7)),
+      "last_on_multiple" -> Seq(n(b / 2), n(b / 2), n(b)))
+    // unique doc_ids, ascending in list order within a stratum, drawn
+    // at random across strata; rows are shuffled, so row order says
+    // nothing of key order
+    val ids = rnd.shuffle((1L to 10000L).toVector).iterator
+    val rows = (random ++ planted).flatMap { case (s, toks) =>
+      toks.zip(Seq.fill(toks.size)(ids.next()).sorted)
+        .map { case (t, id) => (s, java.lang.Long.valueOf(id), t) }
+    }
+    val df = rnd.shuffle(rows).toDF("s", "doc_id", "n_tok").repartition(4)
+    val flatW = Window.partitionBy(col("s")).orderBy(col("doc_id"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    def collectMap(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => r.getString(0) ->
+        (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
+    val window = collectMap(df
+      .withColumn("start", sum(col("n_tok")).over(flatW) - col("n_tok"))
+      .groupBy(col("s"))
+      .agg((max(expr(s"start DIV $b")) + 1).as("n_seq")))
+    val closed = collectMap(df.groupBy(col("s"))
+      .agg(Corpus.packedSeqCount("n_tok", "doc_id", b).as("n_seq")))
+    assert(closed === window)
+    assert(closed.size === random.size + planted.size)
+    // the planted cases, by hand from the packing definition
+    assert(closed("null_last") === Some((50L + 40L) / b + 1))
+    assert(closed("null_tail") === Some(1L))
+    assert(closed("all_null") === None && window("all_null") === None)
+    assert(closed("single_null") === None)
+    assert(closed("zeros") === Some(1L) && closed("single_zero") === Some(1L))
+    assert(closed("zero_last") === Some(3L))
+    assert(closed("single") === Some(1L))
+    assert(closed("exact_multiples") === Some(4L))
+    assert(closed("last_on_multiple") === Some(2L))
+    // the random strata pack into many sequences, not only one
+    assert(random.count { case (k, _) => closed(k).exists(_ > 2L) } > 20)
+  }
+
   /** The p14 one-scan claim, checked over one trainingBuild and its
     * landing under the session's current checkpoint posture.
     */
@@ -618,6 +679,7 @@ class CorpusSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.util.QueryExecutionListener
     object Walk extends AdaptiveSparkPlanHelper {
       // every node, including the plans behind cached relations
@@ -659,12 +721,22 @@ class CorpusSpec extends AnyFunSuite {
       // read the cache, so it counts once; a scan only planned, never
       // run, reads no rows and does not count.
       val df = Corpus.trainingBuild(Tables.documents(spark, sf))
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      val buildQueries = queries.size
       graft.sources.PartitionedSink.writeAndSummarize(df, "split",
         "n_copies", graft.Staging.dir("graft_p14_scan_spec_")).collect()
       org.apache.spark.ListenerBusDrain(spark.sparkContext)
       spark.listenerManager.unregister(listener)
-      val ran = scala.jdk.CollectionConverters.IterableHasAsScala(queries)
+      val all = scala.jdk.CollectionConverters.IterableHasAsScala(queries)
         .asScala.toSeq
+      // the landing packs in closed form: no query it runs windows
+      val windows = all.drop(buildQueries)
+        .flatMap(qe => Walk.nodes(qe.executedPlan))
+        .collect { case w: WindowExec => w }
+      assert(windows.isEmpty,
+        s"p14: the landing must run no window (packing is closed-form):\n" +
+          windows.mkString("\n"))
+      val ran = all
         .flatMap(qe => Walk.nodes(qe.executedPlan))
         .collect { case s: FileSourceScanExec if isDocs(s) && readsText(s) => s }
         .filter(_.metrics.get("numOutputRows").exists(_.value > 0))
@@ -680,18 +752,12 @@ class CorpusSpec extends AnyFunSuite {
         Tables.documents(spark, sf).count(),
         "p14: the one text scan must read the corpus exactly once")
       // and the registered plan is TRUNCATED: downstream re-reads the
-      // checkpoint, never the corpus text; the packing stage's
-      // bucket-bound branch keeps at most one scan, column-pruned to
-      // (source, doc_id) key metadata
+      // checkpoint and never scans the corpus again, text or metadata
       df.collect()
       val scanLines = docScans(df)
-      assert(scanLines.count(_.contains("text")) === 0,
-        s"p14: the registered plan must never re-read corpus text " +
-          s"(the split table is checkpointed):\n" +
-          df.queryExecution.executedPlan)
-      assert(scanLines.size <= 1,
-        s"p14: at most one pruned metadata scan downstream of the " +
-          s"checkpoint (found ${scanLines.size}):\n" +
+      assert(scanLines.size === 0,
+        s"p14: no documents scan downstream of the checkpoint " +
+          s"(found ${scanLines.size}):\n" +
           df.queryExecution.executedPlan)
     } finally {
       spark.listenerManager.unregister(listener)
