@@ -541,6 +541,24 @@ object Corpus {
           .otherwise(lit("train")))
   }
 
+  /** The resolved (doc_id, cluster_rep) map is a BUILD-ONCE artifact
+    * per corpus cut (the d10/s02 index precedent): a deployment
+    * resolves the pair graph once — usually as a byproduct of the
+    * dedup pass it already runs (p03) — and every split consumer
+    * reads the map. Built through `Staging.memo`, localCheckpoint'ed
+    * (dup graph nodes only).
+    *
+    * The map is shared by p10 (splits) and p12 (soft-dedup sampling)
+    * — one pair-graph resolution per corpus cut serves every
+    * dedup-aware consumer.
+    */
+  private def resolvedGroups(documents: DataFrame,
+      cacheKey: String): DataFrame =
+    graft.Staging.memo("p10_groups", cacheKey, documents.sparkSession) {
+      graft.operators.Dedup.dedupGroups(
+        graft.operators.Dedup.ngramJaccard(documents)).localCheckpoint(true)
+    }
+
   /** p10_leak_safe_split — DEDUP-AWARE train/val/test assignment:
     * p08 splits each document independently, so a near-duplicate
     * pair can straddle the boundary — a val/test document that is a
@@ -569,31 +587,6 @@ object Corpus {
     * existing cluster's rep). The split itself stays a projection:
     * the only per-doc state added is the 8-byte rep_id.
     */
-  /** The resolved (doc_id, cluster_rep) map is a BUILD-ONCE artifact
-    * per corpus cut (the d10/s02 index precedent): a deployment
-    * resolves the pair graph once — usually as a byproduct of the
-    * dedup pass it already runs (p03) — and every split consumer
-    * reads the map. Memoized per cacheKey, localCheckpoint'ed (dup
-    * graph nodes only). Empty key = recompute, what the specs use.
-    * CALLER OWNS KEY UNIQUENESS (the centroid-memo contract).
-    */
-  private val groupsMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  /** The resolved (doc_id, cluster_rep) map, shared by p10 (splits)
-    * and p12 (soft-dedup sampling) — one pair-graph resolution per
-    * corpus cut serves every dedup-aware consumer.
-    */
-  private def resolvedGroups(documents: DataFrame,
-      cacheKey: String): DataFrame = {
-    def resolve(): DataFrame = graft.operators.Dedup.dedupGroups(
-      graft.operators.Dedup.ngramJaccard(documents))
-    if (cacheKey.isEmpty) resolve()
-    else groupsMemo.getOrElseUpdate(
-      (documents.sparkSession, cacheKey),
-      resolve().localCheckpoint(true))
-  }
-
   def leakSafeSplit(documents: DataFrame, testPermille: Int = 10,
       valPermille: Int = 50, salt: Long = 9176L,
       cacheKey: String = ""): DataFrame = {

@@ -528,7 +528,7 @@ object Pipeline {
     * same binned equi-join — the plan stays a hash join, never a
     * nested loop, regardless of where the intervals came from.
     *
-    * The CSV staging is memoized per JVM: writing the file simulates
+    * The CSV is staged once per JVM: writing the file simulates
     * the annotation input existing on disk, it is not part of the
     * operator's work.
     */
@@ -545,15 +545,13 @@ object Pipeline {
         sum(col("l_quantity")).as("sum_qty"))
   }
 
-  private lazy val bandsCsvDir: SparkSession => String = {
-    val memo = scala.collection.concurrent.TrieMap.empty[String, String]
-    spark => memo.getOrElseUpdate("bands", {
+  private def bandsCsvDir(spark: SparkSession): String =
+    graft.Staging.memo("q23", "bands") {
       val d = graft.Staging.dir("graft_bands_csv_")
       priceBands(spark).coalesce(1)
         .write.mode("overwrite").option("header", "true").csv(d)
       d
-    })
-  }
+    }
 
   /** q13_metrics — multi-statistic summary with ratio-of-total, the
     * picard metrics step (reference tools.py:447-496). The over-()

@@ -212,21 +212,17 @@ object Similarity {
   /** Centroid-table memo: a learned IVF index is a build-once
     * artifact — the production shape is train-the-quantizer-once,
     * serve every query from it (same argument as k02's bucketed
-    * staging memo). `cacheKey` (e.g. the input SF dir) memoizes the
-    * learned centroids per (key, k, iters); the memoized table is
-    * localCheckpoint'ed (k rows) so repeats skip the Lloyd passes
-    * entirely. Empty cacheKey = always retrain (what the specs use —
-    * and since k-means here is bit-deterministic, memoized and fresh
-    * centroids are identical anyway).
+    * staging memo). `Staging.memo` builds the centroids once per
+    * (key, k, iters); the table is localCheckpoint'ed (k rows) so
+    * repeats skip the Lloyd passes entirely (k-means here is
+    * bit-deterministic, so memoized and fresh centroids are identical
+    * anyway).
     */
-  private val centroidMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Int), DataFrame]
-
   private def learnedCentroids(e: DataFrame, k: Int, iters: Int,
       cacheKey: String): DataFrame =
-    if (cacheKey.isEmpty) kmeansCentroids(e, k, iters)
-    else centroidMemo.getOrElseUpdate((e.sparkSession, cacheKey, k, iters),
-      kmeansCentroids(e, k, iters).localCheckpoint(true))
+    graft.Staging.memo("s02", cacheKey, e.sparkSession, k, iters) {
+      kmeansCentroids(e, k, iters).localCheckpoint(true)
+    }
 
   /** (vec_id, cluster_id) under the learned quantizer — the public
     * handle specs and d08 use to block without labels.
@@ -429,23 +425,16 @@ object Similarity {
     cb.withColumn("code", (row_number().over(dense) - 1).cast("long"))
   }
 
-  /** PQ index memo: codebook + corpus codes are build-once artifacts
-    * (the same train-once-serve-many argument as the IVF centroid
-    * memo); the codes table is the index — `subspaces` bytes of
-    * payload per vector in production, against 4·dim for raw floats.
-    * CALLER OWNS KEY UNIQUENESS (the centroid-memo contract): the
-    * memo keys on (cacheKey, params) only, not on the embeddings
-    * DataFrame — passing a DIFFERENT corpus under the same non-empty
-    * key silently serves the other corpus's codebook/codes. The
-    * harness keys by dataset directory; any other caller must key by
-    * corpus identity too, or pass "" to disable the memo.
+  /** PQ index: codebook + corpus codes are build-once artifacts
+    * (the same train-once-serve-many argument as the IVF centroids,
+    * `Staging.memo`); the codes table is the index — `subspaces`
+    * bytes of payload per vector in production, against 4·dim for raw
+    * floats.
     */
-  private val pqMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Int, Int, Int), (DataFrame, DataFrame)]
-
   private def pqIndex(e: DataFrame, subspaces: Int, subDim: Int,
-      ks: Int, iters: Int, cacheKey: String): (DataFrame, DataFrame) = {
-    def build(): (DataFrame, DataFrame) = {
+      ks: Int, iters: Int, cacheKey: String): (DataFrame, DataFrame) =
+    graft.Staging.memo("s04", cacheKey, e.sparkSession, subspaces, subDim,
+        ks, iters) {
       val cb = pqCodebook(e, subspaces, subDim, ks, iters)
       val codes = pqAssign(subVecs(e, subspaces, subDim), cb)
         .groupBy(col("vec_id"))
@@ -454,15 +443,8 @@ object Similarity {
             array_sort(collect_list(struct(col("sub_id"), col("code")))),
             x => x.getField("code")).as("codes"),
           first(col("nrm")).as("nrm"))
-      (cb, codes)
-    }
-    if (cacheKey.isEmpty) build()
-    else pqMemo.getOrElseUpdate(
-      (e.sparkSession, cacheKey, subspaces, subDim, ks, iters), {
-      val (cb, codes) = build()
       (cb.localCheckpoint(true), codes.localCheckpoint(true))
-    })
-  }
+    }
 
   /** s04_ann_pq — product-quantization ANN, the memory-bandwidth
     * scale path: each vector is compressed to `subspaces` codeword
@@ -547,24 +529,6 @@ object Similarity {
         round(col("cosine"), 4).as("cosine"))
   }
 
-  /** Residual-PQ index for s05: every vector's RESIDUAL against its
-    * assigned centroid is what gets quantized (the codebook and codes
-    * both live in residual space), and each index row keeps the
-    * ORIGINAL vector's norm (the cosine denominator) plus its
-    * cluster id. Build-once memo like the component indexes — keyed
-    * by the quantizer params too, because the residuals (hence the
-    * codebook) change whenever the coarse quantizer does. The
-    * residual subtraction is a build-time HOF over the corpus (runs
-    * once, memoized), not a query-time cost. CALLER OWNS KEY
-    * UNIQUENESS (see pqMemo): keyed on (cacheKey, params), not on
-    * the embeddings DataFrame — a different corpus under the same
-    * non-empty key gets the other corpus's index. Key by corpus
-    * identity, or pass "" to disable.
-    */
-  private val ivfpqMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Int, Int, Int, Int, Int),
-      (DataFrame, DataFrame)]
-
   /** Residuals x−c(x) of `e` against its nearest centroid — the
     * vectors the PQ codebook trains on and encodes (shared with the
     * durable index's O(batch) append, which encodes NEW arrivals'
@@ -593,23 +557,27 @@ object Similarity {
         first(col("nrm")).as("nrm"))
       .join(resid.select(col("vec_id"), col("cluster_id")), "vec_id")
 
+  /** Residual-PQ index for s05: every vector's RESIDUAL against its
+    * assigned centroid is what gets quantized (the codebook and codes
+    * both live in residual space), and each index row keeps the
+    * ORIGINAL vector's norm (the cosine denominator) plus its
+    * cluster id. Built once like the component indexes
+    * (`Staging.memo`) — keyed by the quantizer params too, because the
+    * residuals (hence the codebook) change whenever the coarse
+    * quantizer does. The residual subtraction is a build-time HOF over
+    * the corpus (runs once), not a query-time cost.
+    */
   private def residualPqIndex(e: DataFrame, cent: DataFrame,
       subspaces: Int, subDim: Int, ks: Int, iters: Int,
       cacheKey: String, kClusters: Int, lloydIters: Int)
-      : (DataFrame, DataFrame) = {
-    def build(): (DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame) =
+    graft.Staging.memo("s05", cacheKey, e.sparkSession, subspaces, subDim,
+        ks, iters, kClusters, lloydIters) {
       val resid = residualsOf(e, cent)
       val cb = pqCodebook(resid, subspaces, subDim, ks, iters)
-      (cb, encodeResiduals(resid, cb, subspaces, subDim))
+      (cb.localCheckpoint(true),
+        encodeResiduals(resid, cb, subspaces, subDim).localCheckpoint(true))
     }
-    if (cacheKey.isEmpty) build()
-    else ivfpqMemo.getOrElseUpdate(
-      (e.sparkSession, cacheKey, subspaces, subDim, ks, iters,
-        kClusters, lloydIters), {
-        val (cb, codes) = build()
-        (cb.localCheckpoint(true), codes.localCheckpoint(true))
-      })
-  }
 
   /** s05_ann_ivfpq — the composed billion-scale ANN shape: s02's
     * learned IVF quantizer decides WHICH vectors get scanned (nprobe

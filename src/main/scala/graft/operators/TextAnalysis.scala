@@ -226,20 +226,12 @@ object TextAnalysis {
     (merges.toSeq.toDF("rank", "left", "right", "pair_count"), 1)
   }
 
-  /** Train-once memo for the registered entry (the merge table is a
-    * tokenizer model artifact — s02's centroid contract; caller owns
-    * key uniqueness).
+  /** Train-once entry for the registered query (the merge table is a
+    * tokenizer model artifact — s02's centroid contract, `Staging.memo`).
     */
-  private val bpeMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), DataFrame]
-
   def bpeMergesCached(documents: DataFrame, nMerges: Int = BpeMerges,
       cacheKey: String = ""): DataFrame =
-    if (cacheKey.isEmpty) bpeMerges(documents, nMerges)
-    // a DataFrame is bound to its session — keying by session too
-    // keeps a later session from resurrecting a stopped session's plan
-    else bpeMemo.getOrElseUpdate(
-      (documents.sparkSession, cacheKey, nMerges),
+    graft.Staging.memo("t13", cacheKey, documents.sparkSession, nMerges)(
       bpeMerges(documents, nMerges))
 
   /** t14's fixed merge chain (a tokenizer SPEC, applied in rank

@@ -53,9 +53,6 @@ import graft.operators.Similarity
   */
 object AnnIndexStore {
 
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   // the s05 registered dials — the landed index stores artifacts
   // built at these; fetch-time dials (nprobe, rerankDepth) stay free
   private[graft] val KClusters = 10
@@ -191,21 +188,17 @@ object AnnIndexStore {
 
   /** Stage the two-version demo index for `embeddings`: v1 trains on
     * the base slice (vec_id % 4 != 3), v2 appends the rest — the
-    * continuous-ingest split. Memoized per cacheKey like every
-    * staged sink.
+    * continuous-ingest split.
     */
   private[graft] def stageIndex(embeddings: DataFrame,
-      cacheKey: String): String = {
-    def fresh(): String = {
+      cacheKey: String): String =
+    graft.Staging.memo("k31", cacheKey) {
       val dir = graft.Staging.dir("graft_k31_")
       buildAndAppend(
         embeddings.filter(pmod(col("vec_id"), lit(4L)) =!= 3L),
         embeddings.filter(pmod(col("vec_id"), lit(4L)) === 3L), dir)
       dir
     }
-    if (cacheKey.isEmpty) fresh()
-    else staged.getOrElseUpdate(cacheKey, fresh())
-  }
 
   /** Registered k31 query: the LOSSLESS-dial fetch through the
     * incrementally-maintained v2 index — probe all clusters, rerank

@@ -39,9 +39,6 @@ import org.apache.spark.sql.functions._
   */
 object BlobStore {
 
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private[graft] val RefSchema =
     "doc_id BIGINT, source STRING, digest STRING, n_bytes BIGINT"
 
@@ -63,11 +60,10 @@ object BlobStore {
   /** Land the demo store: the corpus ingested as two deterministic
     * slices (pmod over doc_id stands in for two arrival batches), so
     * the staged artifact itself proves incremental admission — the
-    * second slice stores only digests the first did not. Memoized
-    * per corpus cut like every staged sink.
+    * second slice stores only digests the first did not.
     */
-  def stage(documents: DataFrame, cacheKey: String = ""): String = {
-    def fresh(): String = {
+  def stage(documents: DataFrame, cacheKey: String = ""): String =
+    graft.Staging.memo("m08", cacheKey) {
       val root = graft.Staging.dir("graft_m08_") + "/cas"
       val rows = payloadRows(documents)
       // coalesce: a keyless (NULL doc_id) payload must arrive in
@@ -78,9 +74,6 @@ object BlobStore {
       ingest(documents.sparkSession, root, rows.filter(slice === 1L))
       root
     }
-    if (cacheKey.isEmpty) fresh()
-    else staged.getOrElseUpdate(cacheKey, fresh())
-  }
 
   /** CAS admission for one arrival slice (digested rows). Returns
     * the number of NOVEL blobs landed. References always append

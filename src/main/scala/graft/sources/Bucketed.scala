@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   * — the standard answer to "this 100 TB join runs nightly against
   * the same key". One bucketed write amortizes across every
   * downstream join — which is also why the driver-entry staging below
-  * is memoized per (input, buckets): re-bucketing on every invocation
-  * would both mis-measure the join and leak a temp tree per call.
+  * is built once per (input, buckets): re-bucketing on every
+  * invocation would both mis-measure the join and leak a temp tree per
+  * call.
   */
 object Bucketed {
 
@@ -29,43 +30,31 @@ object Bucketed {
       .sortBy(key)
       .saveAsTable(table)
 
-  /** Bucketed staging memo: (cacheKey, buckets) → (ordersTable,
-    * lineitemTable). Table names carry a per-JVM nonce so two
-    * sessions sharing one metastore never collide on the fixed
-    * `graft_*_b` names.
-    */
-  private val nonce = java.lang.Long.toHexString(System.nanoTime())
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), (String, String)]
-
   /** k02 driver entry — orders ⋈ lineitem on the order key, both
     * sides bucketed identically: the scan feeds SortMergeJoin with
     * NO exchange on either side (asserted by spec). `hint("merge")`
     * pins the join strategy so AQE's broadcast conversion doesn't
     * hide the bucket co-location being demonstrated.
     *
-    * `cacheKey` (e.g. the input SF dir) memoizes the bucketed write:
-    * the first call stages both tables, repeats reuse them — the
-    * production shape, where bucketing is a one-time layout decision
-    * and every nightly join reads it. Empty cacheKey = always restage.
+    * The bucketed write goes through `Staging.memo`: bucketing is a
+    * one-time layout decision and every nightly join reads it. Table
+    * names carry the staging dir's unique name, so two stagings — or
+    * two sessions sharing one metastore — never collide.
     */
   def bucketedOrderJoin(spark: SparkSession, orders: DataFrame,
       lineitem: DataFrame, buckets: Int = 8,
       cacheKey: String = ""): DataFrame = {
-    def stage(): (String, String) = {
+    val (to, tl) = graft.Staging.memo("k02", cacheKey, buckets) {
       val base = graft.Staging.dir("graft_bucketed_")
-      val suffix = s"${nonce}_${staged.size}"
-      val to = s"graft_orders_b_$suffix"
-      val tl = s"graft_lineitem_b_$suffix"
+      val id = java.nio.file.Paths.get(base).getFileName.toString
+      val to = s"${id}_orders"
+      val tl = s"${id}_lineitem"
       writeBucketed(orders.select(col("o_orderkey"), col("o_orderstatus")),
         to, "o_orderkey", buckets, s"$base/orders")
       writeBucketed(lineitem.select(col("l_orderkey"), col("l_quantity")),
         tl, "l_orderkey", buckets, s"$base/lineitem")
       (to, tl)
     }
-    val (to, tl) =
-      if (cacheKey.isEmpty) stage()
-      else staged.getOrElseUpdate((cacheKey, buckets), stage())
     spark.table(to).hint("merge")
       .join(spark.table(tl),
         col("o_orderkey") === col("l_orderkey"))

@@ -37,9 +37,6 @@ import org.apache.spark.sql.types._
   */
 object ColumnStats {
 
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def statsPath(dir: String, version: Int): String =
     s"$dir/meta/stats_v$version"
 
@@ -126,20 +123,17 @@ object ColumnStats {
 
   /** Registered k29 query: both versions' stats artifacts read back
     * (metadata-only — the scan lists nothing outside `meta/`). The
-    * analyze pass itself runs once per corpus cut (memoized with the
-    * staged catalog), v1 full, v2 incremental.
+    * analyze pass itself runs once per corpus cut (`Staging.memo`),
+    * v1 full, v2 incremental.
     */
   def columnStats(documents: DataFrame,
       cacheKey: String = ""): DataFrame = {
     val spark = documents.sparkSession
     val dir = TimeTravel.stageVersions(documents, cacheKey)
-    def ensure(): String = {
+    graft.Staging.memo("k29", cacheKey) {
       analyze(spark, dir, 1)
       analyze(spark, dir, 2)
-      dir
     }
-    if (cacheKey.isEmpty) ensure()
-    else staged.getOrElseUpdate(cacheKey + "#k29", ensure())
     Seq(1, 2).map { v =>
       spark.read.parquet(statsPath(dir, v))
         .withColumn("version", lit(v.toLong))

@@ -84,17 +84,14 @@ object Compaction {
     * (the file-geometry claim — few files after, many before — is
     * spec-asserted via `fileCounts`; SQL cannot see files).
     *
-    * The fragmented stage is memoized per `cacheKey` (bench
-    * warmup/timed reuse, like k02's bucket staging); the compaction
-    * itself RUNS on every call — it IS the operator under test.
+    * The fragmented stage goes through `Staging.memo`; the
+    * compaction itself RUNS on every call — it IS the operator under
+    * test.
     */
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   def documentsCompaction(documents: DataFrame,
       cacheKey: String = ""): DataFrame = {
     val spark = documents.sparkSession
-    def stage(): String = {
+    val base = graft.Staging.memo("k03", cacheKey) {
       val dir = graft.Staging.dir("graft_k03_frag_")
       // 16 hash writers per lang directory = the arrival-fragmented
       // layout (each writer task emits one file per lang it holds).
@@ -104,9 +101,6 @@ object Compaction {
         .parquet(s"$dir/frag")
       dir
     }
-    val base =
-      if (cacheKey.isEmpty) stage()
-      else staged.getOrElseUpdate(cacheKey, stage())
     // one output tree per staged input, OVERWRITTEN per call — the
     // production shape (compaction rewrites in place-ish), and no
     // temp-dir leak across bench repetitions. Both trees live under

@@ -42,9 +42,6 @@ import org.apache.spark.sql.functions._
   */
 object CoverageTrack {
 
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private[graft] val trackSchema =
     "bin_id BIGINT, n_events BIGINT, sum_value DOUBLE, event_type STRING"
 
@@ -54,12 +51,10 @@ object CoverageTrack {
   private[graft] val WindowLoOffset = 24L
   private[graft] val WindowHiOffset = 72L
 
-  /** Land q10's bins as the sorted, partitioned track tree;
-    * memoized per cacheKey like every staged sink.
-    */
+  /** Land q10's bins as the sorted, partitioned track tree. */
   def stageTrack(events: DataFrame, writers: Int = 8,
-      cacheKey: String = ""): String = {
-    def fresh(): String = {
+      cacheKey: String = ""): String =
+    graft.Staging.memo("k15", cacheKey) {
       val dir = graft.Staging.dir("graft_k15_") + "/track"
       graft.operators.Pipeline.binCoverage(events)
         .repartitionByRange(writers, col("event_type"), col("bin_id"))
@@ -69,9 +64,6 @@ object CoverageTrack {
         .parquet(dir)
       dir
     }
-    if (cacheKey.isEmpty) fresh()
-    else staged.getOrElseUpdate(cacheKey, fresh())
-  }
 
   private[graft] def readTrack(spark: SparkSession,
       dir: String): DataFrame =

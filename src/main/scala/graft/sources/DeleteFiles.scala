@@ -40,9 +40,6 @@ import org.apache.spark.sql.functions._
   */
 object DeleteFiles {
 
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private[graft] val StoreSchema =
     "doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT"
 
@@ -56,12 +53,6 @@ object DeleteFiles {
   private[graft] val DelMod2 = 101L
   private[graft] val DelRes2 = 13L
 
-  /** Land the hashed store tree and two delete commits beside it.
-    * The delete keys are derived FROM THE LANDED STORE (a delete
-    * names keys that exist), each commit its own `_deletes/d{N}`
-    * file — commits accumulate, they are never merged in place.
-    * Memoized per corpus cut like every staged sink.
-    */
   /** The base tree alone — shared by the batch stage and st20's
     * streaming twin (whose delete commits arrive as a stream).
     */
@@ -84,9 +75,14 @@ object DeleteFiles {
       base.filter(pmod(col("doc_id"), lit(DelMod2)) === DelRes2))
   }
 
+  /** Land the hashed store tree and two delete commits beside it.
+    * The delete keys are derived FROM THE LANDED STORE (a delete
+    * names keys that exist), each commit its own `_deletes/d{N}`
+    * file — commits accumulate, they are never merged in place.
+    */
   def stage(documents: DataFrame, writers: Int = 32,
-      cacheKey: String = ""): String = {
-    def fresh(): String = {
+      cacheKey: String = ""): String =
+    graft.Staging.memo("k25", cacheKey) {
       val root = graft.Staging.dir("graft_k25_") + "/store"
       stageStoreOnly(documents, root, writers)
       val spark = documents.sparkSession
@@ -95,9 +91,6 @@ object DeleteFiles {
       }
       root
     }
-    if (cacheKey.isEmpty) fresh()
-    else staged.getOrElseUpdate(cacheKey, fresh())
-  }
 
   /** One delete commit: keys only, one small file. */
   private[graft] def commitDelete(keys: DataFrame, dir: String): Unit =

@@ -38,9 +38,6 @@ import org.apache.spark.sql.functions._
   */
 object FileBloomIndex {
 
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** The store's on-disk schema — ONE definition shared by the
     * staged write's projection, readStore, and the candidate-file
     * fetch, so a column addition can't silently diverge the paths.
@@ -67,11 +64,6 @@ object FileBloomIndex {
   private[graft] val LookupMod = 97L
   private[graft] val LookupRes = 7L
 
-  /** Land the store as a multi-file tree hashed on doc_id (point
-    * lookups don't care about order; hash spreads write skew), then
-    * build the per-file bloom manifest beside it. Memoized per
-    * cacheKey like every staged sink.
-    */
   /** Index dir for a sizing, beside the store. Underscore-prefixed
     * (any `_bloom*` name is invisible to data reads); suffixed by
     * the dials because the bits on disk are sized by them — two
@@ -86,8 +78,8 @@ object FileBloomIndex {
     * never re-land the corpus.
     */
   def stageStore(documents: DataFrame, writers: Int = 32,
-      cacheKey: String = ""): String = {
-    def fresh(): String = {
+      cacheKey: String = ""): String =
+    graft.Staging.memo("k17", cacheKey) {
       val dir = graft.Staging.dir("graft_k17_") + "/store"
       documents
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
@@ -95,24 +87,18 @@ object FileBloomIndex {
         .write.mode(SaveMode.Overwrite).parquet(dir)
       dir
     }
-    if (cacheKey.isEmpty) fresh()
-    else staged.getOrElseUpdate(cacheKey, fresh())
-  }
 
-  private val stagedIndexes =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int), String]
-
-  /** Build (memoized per (store, sizing)) the per-file bloom
-    * manifest at the sizing's own dir and return that dir.
+  /** Build (once per (store, sizing), `Staging.memo`) the per-file
+    * bloom manifest at the sizing's own dir and return that dir.
     */
   private[graft] def ensureIndex(spark: SparkSession, dir: String,
       words: Int = Words, hashes: Int = Hashes): String =
-    stagedIndexes.getOrElseUpdate((dir, words, hashes), {
+    graft.Staging.memo("k17_index", dir, words, hashes) {
       val idx = indexDirFor(dir, words, hashes)
       indexRowsFor(readStore(spark, dir), words, hashes)
         .write.mode(SaveMode.Overwrite).parquet(idx)
       idx
-    })
+    }
 
   /** The manifest build fold — ONE definition shared by k17's build
     * and k18's bootstrap/refresh, so the index shape cannot drift

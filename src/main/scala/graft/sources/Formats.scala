@@ -15,6 +15,24 @@ import org.apache.spark.sql.functions._
   */
 object Formats {
 
+  /** Output tree for one roundtrip operator (`Staging.memo`, keyed
+    * by the operator's prefix): an empty key is a fresh directory per
+    * call, so two different inputs passed with the default key never
+    * share (and overwrite) one tree.
+    */
+  private def treeFor(prefix: String, cacheKey: String): String =
+    graft.Staging.memo(prefix, cacheKey)(graft.Staging.dir(prefix) + "/tree")
+
+  /** k01's salted-writer discipline for every roundtrip write: a bare
+    * `repartition(partitionCol)` funnels each partition VALUE through
+    * ONE task — at 100 TB a 20 TB language would be serialized by a
+    * single writer. The salt gives each value `writers` parallel
+    * writer tasks while bounding the file count at writers × values.
+    */
+  private def saltedByLang(df: DataFrame, writers: Int): DataFrame =
+    df.repartition(col("lang"),
+      pmod(xxhash64(col("doc_id")), lit(writers)))
+
   /** k05_orc_roundtrip — write the documents table as an ORC tree
     * partitioned by `lang`, read it back with a partition-pruned
     * scan, and summarize per (lang, source) — row counts plus two
@@ -28,32 +46,6 @@ object Formats {
     * input, overwritten per call, no temp-dir churn across bench
     * repetitions.
     */
-  private val outDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Output tree for one roundtrip operator: memoized per cacheKey
-    * (bench warmup/timed reps reuse one tree per input), but an
-    * EMPTY key means "no memo" — a fresh directory per call, so two
-    * different inputs passed with the default key can never share
-    * (and overwrite) one tree.
-    */
-  private def treeFor(prefix: String, cacheKey: String): String = {
-    def fresh() =
-      graft.Staging.dir(prefix) + "/tree"
-    if (cacheKey.isEmpty) fresh()
-    else outDirs.getOrElseUpdate(prefix + cacheKey, fresh())
-  }
-
-  /** k01's salted-writer discipline for every roundtrip write: a bare
-    * `repartition(partitionCol)` funnels each partition VALUE through
-    * ONE task — at 100 TB a 20 TB language would be serialized by a
-    * single writer. The salt gives each value `writers` parallel
-    * writer tasks while bounding the file count at writers × values.
-    */
-  private def saltedByLang(df: DataFrame, writers: Int): DataFrame =
-    df.repartition(col("lang"),
-      pmod(xxhash64(col("doc_id")), lit(writers)))
-
   def orcRoundtrip(documents: DataFrame,
       cacheKey: String = ""): DataFrame = {
     val spark = documents.sparkSession

@@ -39,9 +39,6 @@ import org.apache.spark.sql.functions._
   */
 object IndexMaintenance {
 
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** The fetch list's arithmetic is k17's — one definition (mod 97,
     * residue 7, coprime to the demo's changelog moduli 3/11/13 so
     * the list mixes kept, upserted, deleted, and NULL-partition
@@ -133,11 +130,11 @@ object IndexMaintenance {
 
   /** Stage the full demo: base tree (corpus + NULL-lang shadows,
     * k12's demoBase) → v1 index bootstrap → k12's CDC apply →
-    * incremental refresh to v2. Memoized per cacheKey.
+    * incremental refresh to v2.
     */
   def stageMaintained(documents: DataFrame,
-      cacheKey: String = ""): String = {
-    def fresh(): String = {
+      cacheKey: String = ""): String =
+    graft.Staging.memo("k18", cacheKey) {
       val spark = documents.sparkSession
       val dir = graft.Staging.dir("graft_k18_") + "/tree"
       val base = PartitionUpsert.demoBase(documents)
@@ -149,9 +146,6 @@ object IndexMaintenance {
         fromV = 1, toV = 2)
       dir
     }
-    if (cacheKey.isEmpty) fresh()
-    else staged.getOrElseUpdate(cacheKey, fresh())
-  }
 
   /** The registered query: the arithmetic fetch list resolved
     * through the v2 (post-merge) index — probe, read ONLY candidate

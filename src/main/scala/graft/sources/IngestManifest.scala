@@ -42,9 +42,6 @@ import org.apache.spark.sql.functions._
   */
 object IngestManifest {
 
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), String]
-
   /** Sources whose fetch never started — the whole unit is absent. */
   val missingSources: Seq[String] = Seq("src7", "src13")
 
@@ -63,12 +60,11 @@ object IngestManifest {
       .filter(!(col("source") === "src17" && col("doc_id") % 3 === 2))
 
   /** Stage the simulated drop tree, partitioned by source (the unit
-    * of fetch = the unit of pruning for re-fetch scans); memoized per
-    * cacheKey like the other staged artifacts.
+    * of fetch = the unit of pruning for re-fetch scans).
     */
   def stageDrop(documents: DataFrame, writers: Int = 4,
-      cacheKey: String = ""): String = {
-    def fresh(): String = {
+      cacheKey: String = ""): String =
+    graft.Staging.memo("k11", cacheKey, writers) {
       val dir = graft.Staging.dir("graft_k11_drop_") + "/tree"
       deliveredSlice(documents)
         .repartition(col("source"),
@@ -78,9 +74,6 @@ object IngestManifest {
         .parquet(dir)
       dir
     }
-    if (cacheKey.isEmpty) fresh()
-    else staged.getOrElseUpdate((cacheKey, writers), fresh())
-  }
 
   /** Per-(source, file) fetch detail off the `_metadata` hidden
     * column (k09's technique: no driver file-walk, payload text never

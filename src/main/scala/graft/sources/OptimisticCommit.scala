@@ -55,9 +55,6 @@ import graft.sources.TimeTravel.ManifestRow
   */
 object OptimisticCommit {
 
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   // ---- CAS primitive ----------------------------------------------
 
   /** Atomically create `p` iff absent; true = this caller won. */
@@ -205,7 +202,7 @@ object OptimisticCommit {
   private[graft] def stageConcurrent(documents: DataFrame,
       cacheKey: String = ""): String = {
     val spark = documents.sparkSession
-    def fresh(): String = {
+    graft.Staging.memo("k23", cacheKey) {
       val dir = graft.Staging.dir("graft_k23_")
       TimeTravel.stageBase(documents, dir)
       val base = PartitionUpsert.demoBase(documents)
@@ -225,8 +222,6 @@ object OptimisticCommit {
         s"concurrent writers must land v2 and v3, got $got")
       dir
     }
-    if (cacheKey.isEmpty) fresh()
-    else staged.getOrElseUpdate(cacheKey + "#k23", fresh())
   }
 
   /** Registered k23 query: the serialized head (v3) summarized per

@@ -42,18 +42,15 @@ import org.apache.spark.sql.functions._
   */
 object PartitionEvolution {
 
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private[graft] val DataSchema =
     "doc_id BIGINT, n_chars BIGINT, lang STRING, source STRING"
 
   /** Stage the evolved store: g1 (spec v1: lang) holds doc_id % 3 ∈
     * {1, 2}, the evolution is logged, g2 (spec v2: lang, source)
-    * holds doc_id % 3 = 0. Memoized per corpus cut.
+    * holds doc_id % 3 = 0.
     */
-  def stage(documents: DataFrame, cacheKey: String = ""): String = {
-    def fresh(): String = {
+  def stage(documents: DataFrame, cacheKey: String = ""): String =
+    graft.Staging.memo("k26", cacheKey) {
       val spark = documents.sparkSession
       val root = graft.Staging.dir("graft_k26_") + "/store"
       val rows = documents
@@ -76,9 +73,6 @@ object PartitionEvolution {
       writeSpec(spark, root, 2, Seq("lang", "source"))
       root
     }
-    if (cacheKey.isEmpty) fresh()
-    else staged.getOrElseUpdate(cacheKey, fresh())
-  }
 
   private def writeSpec(spark: SparkSession, root: String, version: Int,
       cols: Seq[String]): Unit = {

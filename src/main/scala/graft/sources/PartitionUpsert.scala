@@ -45,9 +45,6 @@ import org.apache.spark.sql.functions._
   */
 object PartitionUpsert {
 
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   val ChangedLangs: Seq[String] = Seq("en", "de")
 
   private[graft] val HiveNull = "__HIVE_DEFAULT_PARTITION__"
@@ -219,20 +216,17 @@ object PartitionUpsert {
   }
 
   /** Stage the demo base tree (corpus + NULL-lang shadows), apply the
-    * demo changelog; memoized.
+    * demo changelog.
     */
   def stageApplied(documents: DataFrame,
-      cacheKey: String = ""): String = {
-    def fresh(): String = {
+      cacheKey: String = ""): String =
+    graft.Staging.memo("k12", cacheKey) {
       val dir = graft.Staging.dir("graft_k12_") + "/tree"
       val base = demoBase(documents)
       writeTree(base, dir)
       applyChanges(documents.sparkSession, dir, changelog(base))
       dir
     }
-    if (cacheKey.isEmpty) fresh()
-    else staged.getOrElseUpdate(cacheKey, fresh())
-  }
 
   /** The registered query: post-apply tree read back, summarized per
     * lang — counts, key/char checksums, and the upserted-row count

@@ -162,8 +162,6 @@ object PartitionedSink {
     */
   private lazy val sinkDir: String =
     graft.Staging.dir("graft_sink_")
-  private val stagedResume =
-    scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** k01 driver entry: orders partitioned by priority into a temp
     * durable tree; summary compares against the source table.
@@ -180,22 +178,19 @@ object PartitionedSink {
       cacheKey: String = ""): DataFrame = {
     val prior = orders.filter(col("o_orderpriority") < "3")
     // The prior run's DATA is harness staging (a real deployment
-    // inherits the tree from the actual previous run), so it is
-    // memoized per cacheKey like k02/k03's staging. The MANIFEST is
+    // inherits the tree from the actual previous run), so it goes
+    // through `Staging.memo`. The MANIFEST is
     // reset to exactly the prior completions on every call: each
     // invocation then exercises the full resume decision — landed
     // {1,2} skipped, delta {3,4,5} recomputed and dynamically
     // overwritten — rather than degenerating into an all-landed
     // no-op on repeat runs.
-    def stagePrior(): String = {
+    val dir = graft.Staging.memo("q22", cacheKey) {
       val dir = graft.Staging.dir("graft_resume_")
       write(prior, "o_orderpriority", "o_orderkey", dir, 5000000L,
         4, SaveMode.Overwrite)
       dir
     }
-    val dir =
-      if (cacheKey.isEmpty) stagePrior()
-      else stagedResume.getOrElseUpdate(cacheKey, stagePrior())
     val mPath = new org.apache.hadoop.fs.Path(manifestDir(dir))
     val fs = mPath.getFileSystem(
       orders.sparkSession.sessionState.newHadoopConf())

@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   *    explodes to the `windowDays` target days it contributes to
   *    (q38's replica discipline, fan-out = window length on METADATA
   *    rows), never a `between` range join (which would plan a BNLJ).
-  *  - memoized per (session, cacheKey): the build runs once, repeat
-  *    readouts hit the parquet ledger (d10/k02's staging contract).
+  *  - built once per (session, cacheKey) (`Staging.memo`): repeat
+  *    readouts hit the parquet ledger.
   *
   * Rows-only by declaration (DataSketches estimates are not DuckDB-
   * replayable); the spec bounds every estimate against exact
@@ -34,14 +34,11 @@ import org.apache.spark.sql.functions._
   */
 object SketchLedger {
 
-  private val staged = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   /** The materialized ledger: (day, event_type, sk, n_events). */
   private[graft] def ledger(events: DataFrame,
       cacheKey: String): DataFrame = {
     val spark = events.sparkSession
-    def build(): String = {
+    val dir = graft.Staging.memo("k13", cacheKey, spark) {
       val d = graft.Staging.dir("graft_k13_")
       // Tables.events drops null-ts/null-user rows AT THE LOADER —
       // no re-filter here.
@@ -54,9 +51,6 @@ object SketchLedger {
         .write.mode("overwrite").parquet(d)
       d
     }
-    val dir =
-      if (cacheKey.isEmpty) build()
-      else staged.getOrElseUpdate((spark, cacheKey), build())
     spark.read.parquet(dir)
   }
 

@@ -37,15 +37,10 @@ import org.apache.spark.sql.functions._
   */
 object SortedLayout {
 
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Long), String]
-
-  /** Stage the range-clustered, sorted tree; memoized per cacheKey
-    * (empty key = fresh tree per call, Formats.treeFor's contract).
-    */
+  /** Stage the range-clustered, sorted tree (`Staging.memo`). */
   def stageSorted(documents: DataFrame, writers: Int = 8,
-      maxRecords: Long = 5000000L, cacheKey: String = ""): String = {
-    def fresh(): String = {
+      maxRecords: Long = 5000000L, cacheKey: String = ""): String =
+    graft.Staging.memo("k08", cacheKey, writers, maxRecords) {
       val dir = graft.Staging.dir("graft_k08_sorted_") + "/tree"
       documents
         .repartitionByRange(writers, col("lang"), col("doc_id"))
@@ -56,9 +51,6 @@ object SortedLayout {
         .parquet(dir)
       dir
     }
-    if (cacheKey.isEmpty) fresh()
-    else staged.getOrElseUpdate((cacheKey, writers, maxRecords), fresh())
-  }
 
   /** Multi-dimensional clustering (VERDICT r11 item 5): interleave
     * the bits of TWO scan keys so one physical order serves range
@@ -82,8 +74,8 @@ object SortedLayout {
     */
   def stageZordered(documents: DataFrame, writers: Int = 8,
       maxRecords: Long = 5000000L, zBits: Int = 16,
-      cacheKey: String = ""): String = {
-    def fresh(): String = {
+      cacheKey: String = ""): String =
+    graft.Staging.memo("k08_z", cacheKey, writers, maxRecords, zBits) {
       val dir = graft.Staging.dir("graft_k08_zorder_") + "/tree"
       val b = documents
         .agg(min(col("doc_id")), max(col("doc_id")),
@@ -101,10 +93,6 @@ object SortedLayout {
         .parquet(dir)
       dir
     }
-    if (cacheKey.isEmpty) fresh()
-    else staged.getOrElseUpdate(
-      (cacheKey + "#z" + zBits, writers, maxRecords), fresh())
-  }
 
   /** Bit-interleaved Z value of two min-max-normalized keys: bucket
     * each key into [0, 2^zBits) with integer arithmetic, then weave

@@ -197,13 +197,10 @@ object TextIngest {
     * closed-form arithmetic on the documents table — the round trip
     * through 4-line text and back is what's being checked.
     */
-  private val stagedFastq =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   def fastqSummary(documents: DataFrame,
       cacheKey: String = ""): DataFrame = {
     val spark = documents.sparkSession
-    def stage(): String = {
+    val dir = graft.Staging.memo("k04", cacheKey) {
       val dir = graft.Staging.dir("graft_fastq_")
       documents
         // a FASTQ read NEEDS its id — a keyless (NULL doc_id) row has
@@ -229,9 +226,6 @@ object TextIngest {
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).text(dir)
       dir
     }
-    val dir =
-      if (cacheKey.isEmpty) stage()
-      else stagedFastq.getOrElseUpdate(cacheKey, stage())
     readFastq(spark, dir)
       .select(
         // nullif: an unparseable read name must surface as NULL, not

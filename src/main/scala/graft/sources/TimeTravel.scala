@@ -43,9 +43,6 @@ import org.apache.spark.sql.functions._
   */
 object TimeTravel {
 
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private val HiveNull = PartitionUpsert.HiveNull
 
   /** One manifest entry: which commit TREE serves partition `lang`
@@ -260,20 +257,15 @@ object TimeTravel {
     ()
   }
 
-  /** Stage the two-commit demo; memoized per sfDir like every
-    * staged sink.
-    */
+  /** Stage the two-commit demo. */
   def stageVersions(documents: DataFrame,
-      cacheKey: String = ""): String = {
-    def fresh(): String = {
+      cacheKey: String = ""): String =
+    graft.Staging.memo("k14", cacheKey) {
       val dir = graft.Staging.dir("graft_k14_")
       stageBase(documents, dir)
       commitChanges(documents, dir)
       dir
     }
-    if (cacheKey.isEmpty) fresh()
-    else staged.getOrElseUpdate(cacheKey, fresh())
-  }
 
   /** Registered query: BOTH versions read back through their
     * manifests and summarized per (version, lang) — proving v1 is
@@ -389,17 +381,14 @@ object TimeTravel {
     * exactly two versions.
     */
   private[graft] def stageRestored(documents: DataFrame,
-      cacheKey: String = ""): String = {
-    def fresh(): String = {
+      cacheKey: String = ""): String =
+    graft.Staging.memo("k21", cacheKey) {
       val dir = graft.Staging.dir("graft_k21_")
       stageBase(documents, dir)
       commitChanges(documents, dir)
       restore(documents.sparkSession, dir, 1)
       dir
     }
-    if (cacheKey.isEmpty) fresh()
-    else staged.getOrElseUpdate(cacheKey + "#k21", fresh())
-  }
 
   /** Registered k21 query: all three versions read back through
     * their manifests — v1 the pre-image, v2 the bad commit, v3 the
@@ -477,16 +466,13 @@ object TimeTravel {
       cacheKey: String = ""): (String, String) = {
     val spark = documents.sparkSession
     val srcDir = stageVersions(documents, cacheKey)
-    def fresh(): String = {
+    val dstDir = graft.Staging.memo("k22", cacheKey) {
       val dir = graft.Staging.dir("graft_k22_")
       cloneAt(spark, srcDir, dir, 2)
       commitVersion(spark, dir,
         cloneChangelog(readAt(spark, dir, 1)), "c1")
       dir
     }
-    val dstDir =
-      if (cacheKey.isEmpty) fresh()
-      else staged.getOrElseUpdate(cacheKey + "#k22", fresh())
     (srcDir, dstDir)
   }
 
@@ -511,16 +497,13 @@ object TimeTravel {
   def retentionSummary(documents: DataFrame,
       cacheKey: String = ""): DataFrame = {
     val spark = documents.sparkSession
-    def fresh(): String = {
+    val dir = graft.Staging.memo("k30", cacheKey) {
       val dir = graft.Staging.dir("graft_k30_")
       stageBase(documents, dir)
       commitChanges(documents, dir)
       expire(spark, dir, retainFrom = 2)
       dir
     }
-    val dir =
-      if (cacheKey.isEmpty) fresh()
-      else staged.getOrElseUpdate(cacheKey + "#k30", fresh())
     require(versions(spark, dir) == Seq(2),
       s"expire must leave exactly v2 in $dir")
     PartitionUpsert.summarize(readAt(spark, dir, 2))
@@ -630,8 +613,8 @@ object TimeTravel {
     * computed on the post-merge rows).
     */
   private[graft] def stageEvolved(documents: DataFrame,
-      cacheKey: String = ""): String = {
-    def fresh(): String = {
+      cacheKey: String = ""): String =
+    graft.Staging.memo("k24", cacheKey) {
       val spark = documents.sparkSession
       val dir = graft.Staging.dir("graft_k24_")
       stageBase(documents, dir)
@@ -641,9 +624,6 @@ object TimeTravel {
         Seq("quality" -> round(length(col("text")) / 100.0, 4)))
       dir
     }
-    if (cacheKey.isEmpty) fresh()
-    else staged.getOrElseUpdate(cacheKey + "#k24", fresh())
-  }
 
   // ---- k28: change-data-feed (O(delta) version-to-version read) ---
 

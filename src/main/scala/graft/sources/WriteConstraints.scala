@@ -73,9 +73,6 @@ object WriteConstraints {
     (valid, quarantine)
   }
 
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Land the corpus through the constrained sink: valid rows become
     * the table, quarantined rows land under `_rejected/` with their
     * rule names. REFUSES the whole commit when the violation rate
@@ -84,8 +81,8 @@ object WriteConstraints {
     * table (spec-pinned).
     */
   def land(documents: DataFrame, maxRejectPermille: Int = 200,
-      rules: Seq[Rule] = DemoRules, cacheKey: String = ""): String = {
-    def fresh(): String = {
+      rules: Seq[Rule] = DemoRules, cacheKey: String = ""): String =
+    graft.Staging.memo("k27", cacheKey) {
       val root = graft.Staging.dir("graft_k27_") + "/table"
       val rows = documents
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
@@ -103,9 +100,6 @@ object WriteConstraints {
         .parquet(s"$root/_rejected")
       root
     }
-    if (cacheKey.isEmpty) fresh()
-    else staged.getOrElseUpdate(cacheKey, fresh())
-  }
 
   /** One micro-batch through the same gate — k27's split compiled
     * from the SAME rules, landed under the batch's own `data/b<id>`

@@ -37,14 +37,6 @@ import org.apache.spark.sql.functions._
   */
 object ZOrderLayout {
 
-  /** cacheKey → (tree dir, grid bounds). Bounds are immutable
-    * properties of the staged tree, so they memoize WITH it — the
-    * read-back must not pay a second raw-events scan to rediscover
-    * what the write already computed.
-    */
-  private val staged = scala.collection.concurrent.TrieMap
-    .empty[String, (String, (Long, Long, Long, Long))]
-
   /** Bits per dimension: 2^8 quantization levels, 16-bit z. */
   private[graft] val Bits = 8
 
@@ -100,9 +92,13 @@ object ZOrderLayout {
     else (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
   }
 
+  /** (tree dir, grid bounds), staged together: bounds are immutable
+    * properties of the tree, so the read-back must not pay a second
+    * raw-events scan to rediscover what the write already computed.
+    */
   private def stagedTree(events: DataFrame,
-      writers: Int, cacheKey: String): (String, (Long, Long, Long, Long)) = {
-    def fresh(): (String, (Long, Long, Long, Long)) = {
+      writers: Int, cacheKey: String): (String, (Long, Long, Long, Long)) =
+    graft.Staging.memo("k16", cacheKey) {
       val b @ (uLo, uHi, bLo, bHi) = bounds(events)
       val dir = graft.Staging.dir("graft_k16_") + "/zorder"
       events
@@ -118,14 +114,10 @@ object ZOrderLayout {
         .write.mode(SaveMode.Overwrite).parquet(dir)
       (dir, b)
     }
-    if (cacheKey.isEmpty) fresh()
-    else staged.getOrElseUpdate(cacheKey, fresh())
-  }
 
   /** Land events z-clustered by (user_id, time bin). The written
     * schema carries the natural predicate columns (`user_id`,
-    * `bin_id`) — z orders the write and is dropped; memoized per
-    * cacheKey like every staged sink.
+    * `bin_id`) — z orders the write and is dropped.
     */
   def stageZOrder(events: DataFrame, writers: Int = 16,
       cacheKey: String = ""): String =

@@ -42,20 +42,17 @@ import org.apache.spark.sql.functions._
   */
 object ZoneMapCompaction {
 
-  private val staged = scala.collection.concurrent.TrieMap
-    .empty[String, (String, (Long, Long, Long, Long))]
-
   /** Number of fragment directories the demo lands (st17's per-batch
     * shape, driven batch-side so the oracle stays relational).
     */
   private[graft] val Fragments = 6
 
-  /** Stage the fragmented tree + v1, compact into c1 + v2; memoized
-    * per corpus cut like every staged sink. Returns (root, bounds).
+  /** Stage the fragmented tree + v1, compact into c1 + v2
+    * (`Staging.memo`). Returns (root, bounds).
     */
   private[graft] def stageCompacted(events: DataFrame,
-      cacheKey: String = ""): (String, (Long, Long, Long, Long)) = {
-    def fresh(): (String, (Long, Long, Long, Long)) = {
+      cacheKey: String = ""): (String, (Long, Long, Long, Long)) =
+    graft.Staging.memo("k20", cacheKey) {
       val spark = events.sparkSession
       val bounds = ZOrderLayout.bounds(events)
       val root = graft.Staging.dir("graft_k20_") + "/store"
@@ -75,9 +72,6 @@ object ZoneMapCompaction {
       compactInto(spark, root, bounds)
       (root, bounds)
     }
-    if (cacheKey.isEmpty) fresh()
-    else staged.getOrElseUpdate(cacheKey, fresh())
-  }
 
   /** The rewrite: read the fragments THROUGH v1 (never a raw crawl —
     * the manifest is the source of truth for what a generation

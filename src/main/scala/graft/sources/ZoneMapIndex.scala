@@ -49,9 +49,6 @@ import org.apache.spark.sql.functions._
   */
 object ZoneMapIndex {
 
-  private val staged = scala.collection.concurrent.TrieMap
-    .empty[String, (String, String, (Long, Long, Long, Long))]
-
   private[graft] val ManifestSchema =
     "file STRING, u_lo BIGINT, u_hi BIGINT, b_lo BIGINT, b_hi BIGINT"
 
@@ -84,8 +81,8 @@ object ZoneMapIndex {
     * reads, the `_bloom` convention).
     */
   private[graft] def stageWithManifest(events: DataFrame,
-      cacheKey: String = ""): (String, String, (Long, Long, Long, Long)) = {
-    def fresh(): (String, String, (Long, Long, Long, Long)) = {
+      cacheKey: String = ""): (String, String, (Long, Long, Long, Long)) =
+    graft.Staging.memo("k19", cacheKey) {
       val spark = events.sparkSession
       val (dir, bounds) =
         ZOrderLayout.stagedWithBounds(events, cacheKey = cacheKey)
@@ -94,9 +91,6 @@ object ZoneMapIndex {
         .write.mode(SaveMode.Overwrite).parquet(manifest)
       (dir, manifest, bounds)
     }
-    if (cacheKey.isEmpty) fresh()
-    else staged.getOrElseUpdate(cacheKey, fresh())
-  }
 
   /** Files whose stats rectangle OVERLAPS the query rectangle —
     * interval overlap per axis, exact bounds, no false negatives.
