@@ -1188,6 +1188,18 @@ object Corpus {
           .as("id_checksum"))
   }
 
+  /** One multiply round then one quadratic round, mod P — see
+    * shardShuffle's doc for why the sampling layers' affine chain is
+    * not shuffle-grade. h < P keeps h² inside exact Long range in
+    * Spark and DuckDB alike.
+    */
+  private def mixedHash(id: Column, salt: Long): Column = {
+    val P = lit(1000000007L)
+    val K = lit(2654435761L)
+    val h = pmod(pmod(pmod(id, P) + lit(salt), P) * K, P)
+    pmod(pmod(h * h, P) + h, P)
+  }
+
   /** p16_shard_shuffle — the DETERMINISTIC GLOBAL SHUFFLE that turns
     * a prepared corpus into training shards: SGD wants the epoch's
     * read order decorrelated from ingest order (documents land
@@ -1236,18 +1248,6 @@ object Corpus {
     * out) — order-sensitivity is exactly what it never had to face;
     * a training pipeline does, so the engine owns the permutation.
     */
-  /** One multiply round then one quadratic round, mod P — see
-    * shardShuffle's doc for why the sampling layers' affine chain is
-    * not shuffle-grade. h < P keeps h² inside exact Long range in
-    * Spark and DuckDB alike.
-    */
-  private def mixedHash(id: Column, salt: Long): Column = {
-    val P = lit(1000000007L)
-    val K = lit(2654435761L)
-    val h = pmod(pmod(pmod(id, P) + lit(salt), P) * K, P)
-    pmod(pmod(h * h, P) + h, P)
-  }
-
   def shardShuffle(documents: DataFrame, shards: Int = 8,
       saltShard: Long = 5711L, saltOrder: Long = 8231L): DataFrame = {
     import org.apache.spark.sql.expressions.Window

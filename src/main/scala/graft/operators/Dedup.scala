@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{HashExprs, TextOps, VectorOps}
@@ -82,6 +83,93 @@ object Dedup {
           .as("sh"))
       .select(col("doc_id"), col("sh"), size(col("sh")).as("nsh"))
 
+  /** The hot-key cap every candidate self-join shares (d02's bucket,
+    * d04/d09/d10/d13's shingle df, t15's per-doc repetition, d05's
+    * block, m06's chunk bucket): keeps the rows of `posting` whose
+    * `keys` value occurs in at most `max` rows. A key held by B rows
+    * yields B²/2 candidate pairs, so the cap bounds each key's join
+    * fan-out at max²; `Int.MaxValue` keeps every row.
+    *
+    * The count is a WINDOW over the posting exchange, not a groupBy
+    * joined back: an aggregate branch gets its input pruned to a
+    * narrower schema, which makes its subtree non-identical to the
+    * join sides' and defeats exchange reuse, so the pipeline upstream
+    * of the posting (tokenize → shingle, the MinHash or phash kernel)
+    * would run once per branch (measured in the at-scale d04 plan).
+    * The window consumes the same exchange as both self-join sides —
+    * a partitioning on `keys`, or on a subset of them — so that
+    * pipeline materializes once, and the window's sort on `keys` is
+    * the sort-merge join's required sort anyway.
+    */
+  private[graft] def capHotKeys(posting: DataFrame, max: Int,
+      keys: String*): DataFrame =
+    posting
+      .withColumn("key_rows",
+        count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
+      .filter(col("key_rows") <= max)
+      .drop("key_rows")
+
+  /** The shingle-overlap pipeline d04 and d13 score (and p03/p14
+    * through ngramJaccardFromSets): from (doc_id, sh, nsh) digest
+    * sets, every pair sharing at least one shingle that survives the
+    * df ≤ `maxDf` cap, as (doc_a, doc_b, inter, na, nb) with
+    * doc_a < doc_b and `inter` the count of shared surviving
+    * shingles. Pairs sharing no shingle never meet, so the join IS
+    * the candidate filter. `minSizeRatio` = r drops, at join-probe
+    * time, pairs with min(na, nb) < r·max(na, nb); the ε guards the
+    * fp product at the boundary so a rounding of r cannot exclude a
+    * boundary pair.
+    *
+    * ONE exchange on gh feeds the df window and both self-join sides,
+    * so the scan → tokenize → shingle → explode pipeline (the
+    * CPU-heavy part at corpus scale) runs once, not once per branch.
+    */
+  private def shingleOverlaps(sets: DataFrame, maxDf: Int,
+      minSizeRatio: Option[Double] = None): DataFrame = {
+    val posting = capHotKeys(sets
+      .select(col("doc_id"), col("nsh"), explode(col("sh")).as("gh"))
+      .repartition(col("gh")), maxDf, "gh")
+    val shared = col("a.gh") === col("b.gh") && col("a.doc_id") < col("b.doc_id")
+    val candidate = minSizeRatio.fold(shared)(r =>
+      shared && least(col("a.nsh"), col("b.nsh")).cast("double") >=
+        greatest(col("a.nsh"), col("b.nsh")).cast("double") * r - 1e-9)
+    posting.as("a").join(posting.as("b"), candidate)
+      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .agg(count(lit(1)).as("inter"),
+        first(col("a.nsh")).as("na"), first(col("b.nsh")).as("nb"))
+  }
+
+  /** The cross-document (d12) and within-document (t15) scrubs' shared
+    * reassembly: `removed` holds (doc_id, pos) token positions to
+    * delete. The corpus is semi-joined to the AFFECTED doc ids BEFORE
+    * the token explode, so reassembly touches only dup-bearing
+    * documents (a sliver of any real corpus), and each document is
+    * rebuilt by one collect_list(struct(pos, tok)) buffer — bounded by
+    * a single document's length, the same envelope as t05's per-doc
+    * grams. Emits (doc_id, scrubbed, n_removed_tokens, n_tokens) per
+    * affected document, the text rebuilt from the normalized token
+    * stream the span detector saw.
+    */
+  private def scrubPositions(documents: DataFrame,
+      removed: DataFrame): DataFrame = {
+    val affected = removed.select(col("doc_id")).distinct()
+    documents
+      .join(affected, Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), posexplode(TextOps.tokens(col("text"))))
+      .select(col("doc_id"), col("pos").cast("long").as("pos"),
+        col("col").as("tok"))
+      .join(removed.withColumn("rm", lit(1)), Seq("doc_id", "pos"), "left")
+      .groupBy(col("doc_id"))
+      .agg(
+        concat_ws(" ", transform(
+          array_sort(collect_list(
+            when(col("rm").isNull, struct(col("pos"), col("tok"))))),
+          x => x.getField("tok"))).as("scrubbed"),
+        sum(coalesce(col("rm"), lit(0))).cast("long")
+          .as("n_removed_tokens"),
+        count(lit(1)).as("n_tokens"))
+  }
+
   /** d02_dedup_minhash — MinHash+LSH near-duplicate pairs.
     *
     * signature[i] = min over shingles of xxhash64(shingle, i), i.e.
@@ -154,10 +242,10 @@ object Dedup {
     // through 64 (a·x+b) mod M permutations), then band buckets.
     val sig = sets.select(col("doc_id"),
       HashExprs.minhashSigsPortable(col("sh"), numHashes).as("sig"))
-    // Same reuse shape one level up: the hot-bucket guard (groupBy +
-    // join back) and both self-join sides all key on (band, bucket),
-    // so one exchange feeds all four consumers — otherwise every
-    // branch re-runs the MinHash kernel over every shingle set.
+    // Same reuse shape one level up: the hot-bucket cap and both
+    // self-join sides all key on (band, bucket), so one exchange feeds
+    // them all — otherwise every branch re-runs the MinHash kernel
+    // over every shingle set.
     // Bucket = md5_60 of the band's comma-joined signature slice: the
     // shuffle key stays a slim (int, long) — never the 4-long slice —
     // and the oracle replays the same md5 bucket (16 md5 calls/doc).
@@ -171,26 +259,12 @@ object Dedup {
       .withColumnRenamed("pos", "band_id")
       .withColumnRenamed("col", "bucket")
       .repartition(col("band_id"), col("bucket"))
-    // Hot-bucket guard: a (band, bucket) shared by B docs yields
-    // B²/2 candidate pairs — a run of thousands of IDENTICAL
-    // documents (which d01 should have removed upstream, but corpora
-    // misbehave) would otherwise detonate one bucket into millions
-    // of pairs. Buckets above maxBucket are dropped; true near-dups
-    // lose nothing because they co-occur in ~all 16 bands. The guard
-    // is a WINDOW over the banded exchange, not a groupBy+join-back:
-    // the aggregate branch's pruned schema would break subtree
-    // identity and defeat exchange reuse, re-running the MinHash
-    // kernel per branch (see d04's identical fix).
-    val trimmed =
-      if (maxBucket == Int.MaxValue) banded
-      else {
-        import org.apache.spark.sql.expressions.Window
-        banded
-          .withColumn("bsz", count(lit(1))
-            .over(Window.partitionBy(col("band_id"), col("bucket"))))
-          .filter(col("bsz") <= maxBucket)
-          .drop("bsz")
-      }
+    // Hot-bucket cap: a run of thousands of IDENTICAL documents
+    // (which d01 should have removed upstream, but corpora misbehave)
+    // would otherwise detonate one bucket into millions of pairs.
+    // Buckets above maxBucket are dropped; true near-dups lose
+    // nothing because they co-occur in ~all 16 bands.
+    val trimmed = capHotKeys(banded, maxBucket, "band_id", "bucket")
     // SLIM candidate join: only (band, bucket, doc_id) crosses the
     // shuffle — carrying the shingle arrays through the 16×-exploded
     // band join would move ~16 copies of every document's shingles.
@@ -288,53 +362,13 @@ object Dedup {
     */
   private[graft] def ngramJaccardFromSets(sets: DataFrame,
       tau: Double = 0.6, maxDf: Int = 128,
-      lengthPrune: Boolean = true): DataFrame = {
-    // ONE exchange on gh that every consumer reuses: the df filter,
-    // the df-posting join, and both self-join sides all need
-    // hash(gh) partitioning, so materializing the exploded posting
-    // through a single repartition lets ReuseExchange feed all four
-    // from one shuffle — without it the scan→tokenize→shingle→explode
-    // pipeline (the CPU-heavy part at corpus scale) runs once per
-    // branch, 4× total.
-    val exploded = sets
-      .select(col("doc_id"), col("nsh"), explode(col("sh")).as("gh"))
-      .repartition(col("gh"))
-    // df guard as a WINDOW over the posting exchange, not a separate
-    // groupBy+join: an aggregate branch gets its scan pruned to a
-    // narrower schema, which makes its subtree non-identical and
-    // DEFEATS exchange reuse — the tokenize→shingle pipeline then
-    // runs twice (measured in the at-scale plan). The window count
-    // consumes the same exchange the join sides do, so the pipeline
-    // materializes exactly once; partition key gh is high-cardinality
-    // (no skew beyond the hot shingles the filter itself drops), and
-    // the window's gh-sort is the SMJ's required sort anyway.
-    val posting =
-      if (maxDf == Int.MaxValue) exploded
-      else {
-        import org.apache.spark.sql.expressions.Window
-        exploded
-          .withColumn("df", count(lit(1)).over(Window.partitionBy(col("gh"))))
-          .filter(col("df") <= maxDf)
-          .drop("df")
-      }
-    val sizeOk =
-      if (lengthPrune)
-        least(col("a.nsh"), col("b.nsh")).cast("double") >=
-          greatest(col("a.nsh"), col("b.nsh")).cast("double") * tau - 1e-9
-      else lit(true)
-    posting.as("a")
-      .join(posting.as("b"),
-        col("a.gh") === col("b.gh") && col("a.doc_id") < col("b.doc_id") &&
-          sizeOk)
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("inter"),
-        first(col("a.nsh")).as("na"), first(col("b.nsh")).as("nb"))
+      lengthPrune: Boolean = true): DataFrame =
+    shingleOverlaps(sets, maxDf, if (lengthPrune) Some(tau) else None)
       .withColumn("jaccard",
         col("inter").cast("double") /
           (col("na") + col("nb") - col("inter")).cast("double"))
       .filter(col("jaccard") >= tau)
       .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))
-  }
 
   /** d13_ngram_containment — asymmetric CONTAINMENT pairs:
     * C = |A∩B| / min(|A|,|B|), the score that catches a SMALL
@@ -344,10 +378,10 @@ object Dedup {
     * J = inter/union ≤ min/max, so a 50-shingle doc fully contained
     * in a 5000-shingle doc scores J ≈ 0.01 and never crosses d04's
     * τ, while C = 1.0 (the spec PLANTS exactly that shape and pins
-    * d13 flagging what d04 does not). Same candidate discipline as
-    * d04 — one reused posting exchange, df ≤ maxDf join guard, pairs
-    * share ≥ 1 surviving shingle or never meet — with ONE deliberate
-    * difference: d04's length-ratio prune is ABSENT, because for
+    * d13 flagging what d04 does not). It scores d04's overlap
+    * pipeline (shingleOverlaps: one reused posting exchange, df ≤
+    * maxDf cap, pairs share ≥ 1 surviving shingle or never meet) with
+    * ONE deliberate difference: d04's length-ratio prune is ABSENT, because for
     * containment the extreme size ratio IS the signal, not a
     * disqualifier (that prune is only lossless for J). The df cap
     * still bounds the pair blowup at Σdf²; a hot-shingle drop can
@@ -355,23 +389,8 @@ object Dedup {
     * tradeoff, identical here).
     */
   def ngramContainment(documents: DataFrame, n: Int = 3,
-      tau: Double = 0.9, maxDf: Int = 128): DataFrame = {
-    val exploded = shingleSets(documents, n)
-      .select(col("doc_id"), col("nsh"), explode(col("sh")).as("gh"))
-      .repartition(col("gh"))
-    val posting = {
-      import org.apache.spark.sql.expressions.Window
-      exploded
-        .withColumn("df", count(lit(1)).over(Window.partitionBy(col("gh"))))
-        .filter(col("df") <= maxDf)
-        .drop("df")
-    }
-    posting.as("a")
-      .join(posting.as("b"),
-        col("a.gh") === col("b.gh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("inter"),
-        first(col("a.nsh")).as("na"), first(col("b.nsh")).as("nb"))
+      tau: Double = 0.9, maxDf: Int = 128): DataFrame =
+    shingleOverlaps(shingleSets(documents, n), maxDf)
       .withColumn("containment",
         col("inter").cast("double") /
           least(col("na"), col("nb")).cast("double"))
@@ -379,6 +398,19 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"),
         col("na").cast("long").as("na"), col("nb").cast("long").as("nb"),
         round(col("containment"), 4).as("containment"))
+
+  /** (benchmark gram set, corpus posting list): the gram split d06,
+    * d15 and d15's spec instrumentation share.
+    */
+  private def bloomSides(documents: DataFrame, benchmarkMaxId: Long,
+      n: Int): (DataFrame, DataFrame) = {
+    val sets = shingleSets(documents, n)
+    val benchGrams = sets.filter(col("doc_id") < benchmarkMaxId)
+      .select(explode(col("sh")).as("gh"))
+      .distinct()
+    val posting = sets.filter(col("doc_id") >= benchmarkMaxId)
+      .select(col("doc_id"), col("nsh"), explode(col("sh")).as("gh"))
+    (benchGrams, posting)
   }
 
   /** d06_decontaminate — benchmark decontamination: flag corpus
@@ -391,12 +423,7 @@ object Dedup {
     */
   def decontaminate(documents: DataFrame, benchmarkMaxId: Long = 25L,
       n: Int = 3, minRatio: Double = 0.5): DataFrame = {
-    val sets = shingleSets(documents, n)
-    val benchGrams = sets.filter(col("doc_id") < benchmarkMaxId)
-      .select(explode(col("sh")).as("gh"))
-      .distinct()
-    val posting = sets.filter(col("doc_id") >= benchmarkMaxId)
-      .select(col("doc_id"), col("nsh"), explode(col("sh")).as("gh"))
+    val (benchGrams, posting) = bloomSides(documents, benchmarkMaxId, n)
     posting
       .join(broadcast(benchGrams), "gh")
       .groupBy(col("doc_id"))
@@ -416,20 +443,6 @@ object Dedup {
     */
   val BloomGramN: Int = 5
   val BloomBenchMaxId: Long = 25L
-
-  /** (blocklist gram set, corpus posting list) for d15 — one
-    * definition feeding the operator and the spec instrumentation.
-    */
-  private def bloomSides(documents: DataFrame, benchmarkMaxId: Long,
-      n: Int): (DataFrame, DataFrame) = {
-    val sets = shingleSets(documents, n)
-    val benchGrams = sets.filter(col("doc_id") < benchmarkMaxId)
-      .select(explode(col("sh")).as("gh"))
-      .distinct()
-    val posting = sets.filter(col("doc_id") >= benchmarkMaxId)
-      .select(col("doc_id"), col("nsh"), explode(col("sh")).as("gh"))
-    (benchGrams, posting)
-  }
 
   /** d15_bloom_decontaminate — benchmark decontamination with a
     * BLOOM-FILTER pre-filter ahead of the exact confirm join: flag
@@ -557,7 +570,6 @@ object Dedup {
     */
   def dupSpans(documents: DataFrame, spanTokens: Int = 10,
       maxDf: Int = 128): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val posting = documents
       .select(col("doc_id"),
         posexplode(graft.functions.ShingleExprs
@@ -565,12 +577,7 @@ object Dedup {
       .select(col("doc_id"), col("pos").cast("long").as("pos"),
         col("col").as("gh"))
       .repartition(col("gh"))
-    // window-count df guard over the one posting exchange (see d04:
-    // an aggregate branch would defeat exchange reuse via pruning)
-    val capped = posting
-      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("gh"))))
-      .filter(col("df") <= maxDf)
-      .drop("df")
+    val capped = capHotKeys(posting, maxDf, "gh")
     val w = Window.partitionBy(col("doc_a"), col("doc_b"), col("diag"))
       .orderBy(col("pa"))
     // MERGE hint (r18): at bench SF, AQE's runtime stats flip this
@@ -609,39 +616,16 @@ object Dedup {
     *
     * Scale shape: spans explode to (doc, pos) removal rows — output
     * is bounded by total duplicated tokens, and the distinct + joins
-    * all key on doc_id (high cardinality). The corpus is semi-joined
-    * to AFFECTED doc ids BEFORE the token explode, so reassembly
-    * touches only dup-bearing documents (a sliver of any real
-    * corpus), not the corpus. Per-doc reassembly is one
-    * collect_list(struct(pos, tok)) buffer — bounded by a single
-    * document's length, the same envelope as t05's per-doc grams.
+    * all key on doc_id (high cardinality). Reassembly
+    * (scrubPositions) touches only the affected documents.
     */
   def spanScrub(documents: DataFrame, spanTokens: Int = 10,
-      maxDf: Int = 128): DataFrame = {
-    val removed = dupSpans(documents, spanTokens, maxDf)
+      maxDf: Int = 128): DataFrame =
+    scrubPositions(documents, dupSpans(documents, spanTokens, maxDf)
       .select(col("doc_b").as("doc_id"),
         explode(sequence(col("b_start"),
           col("b_start") + col("span_tokens") - 1)).as("pos"))
-      .distinct()
-    val affected = removed.select(col("doc_id")).distinct()
-    val toks = documents
-      .join(affected, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"),
-        posexplode(TextOps.tokens(col("text"))))
-      .select(col("doc_id"), col("pos").cast("long").as("pos"),
-        col("col").as("tok"))
-    toks
-      .join(removed.withColumn("rm", lit(1)), Seq("doc_id", "pos"), "left")
-      .groupBy(col("doc_id"))
-      .agg(
-        concat_ws(" ", transform(
-          array_sort(collect_list(
-            when(col("rm").isNull, struct(col("pos"), col("tok"))))),
-          x => x.getField("tok"))).as("scrubbed"),
-        sum(coalesce(col("rm"), lit(0))).cast("long")
-          .as("n_removed_tokens"),
-        count(lit(1)).as("n_tokens"))
-  }
+      .distinct())
 
   /** t15_repetition_scrub — remove INTRA-document repetition: t05
     * measures duplicated n-grams per document but nothing removes
@@ -664,8 +648,7 @@ object Dedup {
     * rebuilds each maximal repeated span exactly; removal positions
     * are the b-side (later) spans, distinct-unioned across diagonals
     * so a thrice-repeated run scrubs to one copy. Reassembly is
-    * d12's recipe verbatim: semi-join to affected docs BEFORE the
-    * token explode, one bounded per-doc collect_list.
+    * d12's (scrubPositions).
     *
     * Scale shape: the self-join keys on (doc_id, gh) — one exchange,
     * both sides, partition-local fan-out. The per-(doc, gh) `maxRep`
@@ -677,7 +660,6 @@ object Dedup {
   def repetitionScrub(documents: DataFrame,
       spanTokens: Int = Dedup.ScrubSpanTokens,
       maxRep: Int = Dedup.ScrubMaxRep): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val posting = documents
       .select(col("doc_id"),
         posexplode(graft.functions.ShingleExprs
@@ -685,16 +667,12 @@ object Dedup {
       .select(col("doc_id"), col("pos").cast("long").as("pos"),
         col("col").as("gh"))
       .repartition(col("doc_id"))
-    val capped = posting
-      .withColumn("rep",
-        count(lit(1)).over(Window.partitionBy(col("doc_id"), col("gh"))))
-      .filter(col("rep") <= maxRep)
-      .drop("rep")
+    val capped = capHotKeys(posting, maxRep, "doc_id", "gh")
     val w = Window.partitionBy(col("doc_id"), col("diag")).orderBy(col("pa"))
     // MERGE hint: same rationale as dupSpans — keep the posting
     // exchange reused (pipeline once) at every scale, not just with
     // broadcast off (the t15 plan spec's at-scale shape).
-    val removed = capped.as("a").hint("merge")
+    scrubPositions(documents, capped.as("a").hint("merge")
       .join(capped.as("b"),
         col("a.doc_id") === col("b.doc_id") && col("a.gh") === col("b.gh") &&
           col("a.pos") < col("b.pos"))
@@ -707,25 +685,7 @@ object Dedup {
       .select(col("doc_id"),
         explode(sequence(col("b_start"),
           col("b_start") + col("span_tokens") - 1)).as("pos"))
-      .distinct()
-    val affected = removed.select(col("doc_id")).distinct()
-    val toks = documents
-      .join(affected, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"),
-        posexplode(TextOps.tokens(col("text"))))
-      .select(col("doc_id"), col("pos").cast("long").as("pos"),
-        col("col").as("tok"))
-    toks
-      .join(removed.withColumn("rm", lit(1)), Seq("doc_id", "pos"), "left")
-      .groupBy(col("doc_id"))
-      .agg(
-        concat_ws(" ", transform(
-          array_sort(collect_list(
-            when(col("rm").isNull, struct(col("pos"), col("tok"))))),
-          x => x.getField("tok"))).as("scrubbed"),
-        sum(coalesce(col("rm"), lit(0))).cast("long")
-          .as("n_removed_tokens"),
-        count(lit(1)).as("n_tokens"))
+      .distinct())
   }
 
   /** d11_snapshot_diff — dataset-version diffing: which documents
@@ -856,16 +816,12 @@ object Dedup {
   private[graft] def incrementalIndex(documents: DataFrame,
       splitId: Long, n: Int, maxDf: Int, buckets: Int,
       cacheKey: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = documents.sparkSession
     val table = graft.Staging.memo("d10", cacheKey, spark, n, maxDf) {
       val dir = graft.Staging.dir("graft_d10_idx_")
       val table = java.nio.file.Paths.get(dir).getFileName.toString
-      incrementalPosting(documents.filter(col("doc_id") < splitId), n)
-        .withColumn("df",
-          count(lit(1)).over(Window.partitionBy(col("gh"))))
-        .filter(col("df") <= maxDf)
-        .drop("df")
+      capHotKeys(incrementalPosting(
+          documents.filter(col("doc_id") < splitId), n), maxDf, "gh")
         .write.bucketBy(buckets, "gh").sortBy("gh")
         .option("path", s"$dir/idx").mode("overwrite").saveAsTable(table)
       table
@@ -961,7 +917,6 @@ object Dedup {
     */
   def dedupGroups(pairs: DataFrame, aCol: String = "doc_a",
       bCol: String = "doc_b", maxIters: Int = 16): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .localCheckpoint(true)
@@ -1066,14 +1021,7 @@ object Dedup {
       col("vec_id"), col("label"),
       VectorOps.asDouble(col("embedding")).as("v"))
       .withColumn("nrm", VectorOps.l2norm(col("v")))
-    val e =
-      if (maxBlock == Int.MaxValue) scored
-      else scored
-        .withColumn("bsz", count(lit(1))
-          .over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("label"))))
-        .filter(col("bsz") <= maxBlock)
-        .drop("bsz")
+    val e = capHotKeys(scored, maxBlock, "label")
     e.as("a")
       .join(e.as("b"),
         col("a.label") === col("b.label") &&
@@ -1209,7 +1157,6 @@ object Dedup {
   def lineDedup(documents: DataFrame,
       segTokens: Int = BoilerSegTokens,
       minDf: Int = BoilerMinDf): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val segs = documents
       .filter(col("text").isNotNull)
       .select(col("doc_id"), TextOps.tokens(col("text")).as("tk"))

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column operators m01–m02: image/audio/video payloads as
@@ -322,12 +321,7 @@ object Multimodal {
     val postings = phashChunks(documents)
       .select(col("doc_id"), col("chunks"),
         posexplode(col("chunks")).as(Seq("chunk_id", "cv")))
-    // hot-bucket guard as a window over that same exchange
-    val bw = Window.partitionBy(col("chunk_id"), col("cv"))
-    val inBucket = postings
-      .withColumn("bn", count(lit(1)).over(bw))
-      .filter(col("bn") <= maxBucket)
-      .drop("bn")
+    val inBucket = Dedup.capHotKeys(postings, maxBucket, "chunk_id", "cv")
     // hamming verifies MAP-SIDE straight off the band join and the
     // ≤ maxHamming filter runs BEFORE the pair dedup — the dedup
     // exchange then carries only true near-dup pairs, not the

@@ -144,25 +144,6 @@ object Pipeline {
         sum(col("n")).as("total_events"))
       .drop("island")
 
-  /** q40_interval_complement — the COMPLEMENT of the called peaks:
-    * every uncovered/unenriched range between islands, with the
-    * flanks to the observed domain edges (bedtools complement over
-    * macs2's output — the reference pipeline calls peaks,
-    * tools.py:555-622; every downstream "background region" sample
-    * and browser gap track needs the inverse, which no q11/q12/q23
-    * surface emits). Runs PER event_type — the chromosome analog —
-    * so every window in the plan is PARTITIONED (threshold, island
-    * labeling, and the gap lag all key on event_type): the natural
-    * genomics parallelism, no single-partition funnel anywhere.
-    *
-    * Gap construction: one lag over each type's peaks yields the
-    * before-gap [prev_end+1 (or domain start), peak_start-1]; one
-    * per-type tail row yields [last_end+1 (or domain start),
-    * domain end] — which also makes a peak-less type emit its whole
-    * domain as one gap, the correct degenerate complement. All
-    * windows run on post-aggregation cardinalities (#bins, #peaks
-    * per type), never raw events.
-    */
   /** Per-type binned counts — q40/q41's shared scan shape. */
   private def typedBins(events: DataFrame,
       binSeconds: Long): DataFrame =
@@ -203,7 +184,24 @@ object Pipeline {
         max(col("bin_id")).as("peak_end"))
   }
 
-  /** q40_interval_complement.
+  /** q40_interval_complement — the COMPLEMENT of the called peaks:
+    * every uncovered/unenriched range between islands, with the
+    * flanks to the observed domain edges (bedtools complement over
+    * macs2's output — the reference pipeline calls peaks,
+    * tools.py:555-622; every downstream "background region" sample
+    * and browser gap track needs the inverse, which no q11/q12/q23
+    * surface emits). Runs PER event_type — the chromosome analog —
+    * so every window in the plan is PARTITIONED (threshold, island
+    * labeling, and the gap lag all key on event_type): the natural
+    * genomics parallelism, no single-partition funnel anywhere.
+    *
+    * Gap construction: one lag over each type's peaks yields the
+    * before-gap [prev_end+1 (or domain start), peak_start-1]; one
+    * per-type tail row yields [last_end+1 (or domain start),
+    * domain end] — which also makes a peak-less type emit its whole
+    * domain as one gap, the correct degenerate complement. All
+    * windows run on post-aggregation cardinalities (#bins, #peaks
+    * per type), never raw events.
     *
     * NOT LAZY (ADVICE r18 #3): construction eagerly executes the full
     * events scan+aggregate (the bin-table localCheckpoint below) —
@@ -404,41 +402,6 @@ object Pipeline {
       .drop("island")
   }
 
-  /** q24_peak_fdr — macs2's ACTUAL significance machinery
-    * (reference tools.py:555-622 passes `-q '0.01'`): per-bin Poisson
-    * p-values against a local-or-global background λ, then
-    * Benjamini–Hochberg FDR correction, keeping bins whose q-value is
-    * ≤ `qMax` and merging them into peaks. q12/q21's z-score bounds
-    * approximate this; this is the real test, and it is fully
-    * oracle-checkable because every step is SQL-expressible.
-    *
-    * λ = max(global mean, ±k-bin local mean) — macs2's
-    * max(λBG, λ10k) rule. Window avgs of BIGINT counts are exact
-    * (integer-valued double partial sums are order-independent below
-    * 2^53), so λ is bit-identical across engines.
-    *
-    * p = P(Pois(λ) ≥ n) = 1 − e^{−λ}·Σ_{i=0}^{n−1} λ^i/i!, evaluated
-    * by folding the term recurrence term_i = term_{i−1}·λ/i in
-    * ascending i — one IEEE multiply, divide and add per step, the
-    * exact op sequence the oracle's recursive CTE replays, so the
-    * partial sums match bit for bit (the only library call, exp, can
-    * differ by an ulp between libm implementations — tolerated
-    * because p/q feed only an ORDERING and a threshold, and the
-    * output columns are all integers). The sum is capped at 4096
-    * terms on BOTH sides: for λ ≤ ~3800 the terms beyond
-    * λ + 50√λ are below double ulp, so the cap is numerically
-    * lossless at any plausible bin rate; it also bounds the per-bin
-    * sequence array. All of this runs on #bins rows
-    * (post-aggregation), never on raw events — same scale argument
-    * as q12/q21.
-    *
-    * BH: rank bins by (p, bin_id), q = running min of p·m/rank from
-    * the tail (the standard step-up), keep q ≤ qMax. FDR is
-    * controlled PER event_type (the per-chromosome convention) so
-    * every rank/BH window is partitioned — the whole-store variant
-    * is the `perType = false` dial (see peakDetectLocal's scale
-    * note; the partition-less funnel is then an explicit choice).
-    */
   /** Per-bin BH q-values — the shared Poisson+FDR core of
     * peakFdr/peakFdrCandidates. Returns (event_type, bin_id, n, qv).
     */
@@ -478,6 +441,41 @@ object Pipeline {
       .select(col("event_type"), col("bin_id"), col("n"), col("qv"))
   }
 
+  /** q24_peak_fdr — macs2's ACTUAL significance machinery
+    * (reference tools.py:555-622 passes `-q '0.01'`): per-bin Poisson
+    * p-values against a local-or-global background λ, then
+    * Benjamini–Hochberg FDR correction, keeping bins whose q-value is
+    * ≤ `qMax` and merging them into peaks. q12/q21's z-score bounds
+    * approximate this; this is the real test, and it is fully
+    * oracle-checkable because every step is SQL-expressible.
+    *
+    * λ = max(global mean, ±k-bin local mean) — macs2's
+    * max(λBG, λ10k) rule. Window avgs of BIGINT counts are exact
+    * (integer-valued double partial sums are order-independent below
+    * 2^53), so λ is bit-identical across engines.
+    *
+    * p = P(Pois(λ) ≥ n) = 1 − e^{−λ}·Σ_{i=0}^{n−1} λ^i/i!, evaluated
+    * by folding the term recurrence term_i = term_{i−1}·λ/i in
+    * ascending i — one IEEE multiply, divide and add per step, the
+    * exact op sequence the oracle's recursive CTE replays, so the
+    * partial sums match bit for bit (the only library call, exp, can
+    * differ by an ulp between libm implementations — tolerated
+    * because p/q feed only an ORDERING and a threshold, and the
+    * output columns are all integers). The sum is capped at 4096
+    * terms on BOTH sides: for λ ≤ ~3800 the terms beyond
+    * λ + 50√λ are below double ulp, so the cap is numerically
+    * lossless at any plausible bin rate; it also bounds the per-bin
+    * sequence array. All of this runs on #bins rows
+    * (post-aggregation), never on raw events — same scale argument
+    * as q12/q21.
+    *
+    * BH: rank bins by (p, bin_id), q = running min of p·m/rank from
+    * the tail (the standard step-up), keep q ≤ qMax. FDR is
+    * controlled PER event_type (the per-chromosome convention) so
+    * every rank/BH window is partitioned — the whole-store variant
+    * is the `perType = false` dial (see peakDetectLocal's scale
+    * note; the partition-less funnel is then an explicit choice).
+    */
   def peakFdr(events: DataFrame, binSeconds: Long = 3600L,
       k: Int = 12, qMax: Double = 0.01,
       perType: Boolean = true): DataFrame = {

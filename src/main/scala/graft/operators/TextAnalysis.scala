@@ -70,6 +70,16 @@ object TextAnalysis {
         .otherwise("zh"))
   }
 
+  /** t13 registered defaults, shared with the SQL oracle (the
+    * IvfKClusters discipline, ADVICE r16 #1's lesson applied here
+    * preemptively: the oracle's recursion depth and vocab cut splice
+    * from THESE constants, so a default drift cannot desync the two
+    * — it would surface as an edit in one place, not a silent
+    * mismatch hunt).
+    */
+  val BpeMerges: Int = 12
+  val BpeMaxWords: Int = 50000
+
   /** t13_bpe_merges — BPE tokenizer-merge TRAINING: t08 builds the
     * vocabulary seed table; this learns the merge list itself — the
     * (left, right) → fused symbol ranks a byte-pair-encoding
@@ -119,16 +129,6 @@ object TextAnalysis {
     * by a ScalaCheck property against an independent in-memory
     * naive-recount reference, tiebreaks and all.
     */
-  /** t13 registered defaults, shared with the SQL oracle (the
-    * IvfKClusters discipline, ADVICE r16 #1's lesson applied here
-    * preemptively: the oracle's recursion depth and vocab cut splice
-    * from THESE constants, so a default drift cannot desync the two
-    * — it would surface as an edit in one place, not a silent
-    * mismatch hunt).
-    */
-  val BpeMerges: Int = 12
-  val BpeMaxWords: Int = 50000
-
   def bpeMerges(documents: DataFrame, nMerges: Int = BpeMerges,
       maxWords: Int = BpeMaxWords): DataFrame =
     bpeMergesCounted(documents, nMerges, maxWords)._1
@@ -835,6 +835,17 @@ object TextAnalysis {
         col("n_bigrams"), col("min_typ"), col("max_typ"))
   }
 
+  /** (token, n_occurrences) corpus counts — the shared subtree under
+    * t08's vocabulary and t10's OOV boundary (one scan → explode →
+    * token hash-agg).
+    */
+  private def tokenCounts(documents: DataFrame): DataFrame =
+    documents
+      .select(explode(TextOps.tokens(col("text"))).as("token"))
+      .filter(col("token") =!= "")
+      .groupBy(col("token"))
+      .agg(count(lit(1)).as("n_occurrences"))
+
   /** t08_vocab — corpus vocabulary construction: the top-`topN`
     * tokens by frequency with rank, share-of-corpus, and cumulative
     * coverage — the seed table every tokenizer build (BPE/unigram)
@@ -855,17 +866,6 @@ object TextAnalysis {
     * and every rank are deterministic on both engines; shares divide
     * two exact longs, so the IEEE quotient is identical pre-round.
     */
-  /** (token, n_occurrences) corpus counts — the shared subtree under
-    * t08's vocabulary and t10's OOV boundary (one scan → explode →
-    * token hash-agg).
-    */
-  private def tokenCounts(documents: DataFrame): DataFrame =
-    documents
-      .select(explode(TextOps.tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
-      .groupBy(col("token"))
-      .agg(count(lit(1)).as("n_occurrences"))
-
   def vocab(documents: DataFrame, topN: Int = 100): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val counts = tokenCounts(documents)

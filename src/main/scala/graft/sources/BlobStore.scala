@@ -101,8 +101,8 @@ object BlobStore {
   /** Digests already in the store — a DIGEST-column-only read of the
     * blob tree (parquet prunes the payload out of the probe); typed
     * empty before the first landing.
-    */
-  /** `excludeChild` drops one child of `blobs/` from the probe: a
+    *
+    * `excludeChild` drops one child of `blobs/` from the probe: a
     * REPLAYED streaming batch (st22) must compute its novel set
     * against the OTHER batches' landings, not against its own
     * possibly-partial prior attempt — probing its own dir would

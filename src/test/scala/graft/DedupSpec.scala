@@ -49,6 +49,24 @@ class DedupSpec extends AnyFunSuite {
       "candidate generation must be banded, never all-pairs")
   }
 
+  test("d02: maxBucket drops a bucket of identical copies, keeps sane pairs") {
+    import spark.implicits._
+    // four identical copies share every one of the 16 band buckets,
+    // four docs wide; the near-dup pair (1, 2) shares buckets two wide
+    val base = (1 to 60).map(i => s"tok$i").mkString(" ")
+    val hot = (1 to 60).map(i => s"hot$i").mkString(" ")
+    val docs = (Seq((1L, base), (2L, base + " extra trailer tokens here")) ++
+      (11L to 14L).map(i => (i, hot))).toDF("doc_id", "text")
+    def pairs(maxBucket: Int) = Dedup.dedupMinhash(docs,
+      maxBucket = maxBucket).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val copies = for (a <- 11L to 14L; b <- a + 1 to 14L) yield (a, b)
+    assert(pairs(3) === Set((1L, 2L)),
+      "below the copy count, the copies' buckets are all dropped")
+    assert(pairs(4) === copies.toSet + ((1L, 2L)))
+    assert(pairs(256) === pairs(4))
+  }
+
   test("d02: matches d04's exact pairs on real data (recall at high j)") {
     // Every exact-Jaccard pair at tau well above the LSH S-curve knee
     // must be found by the banded candidate generation.
@@ -570,7 +588,8 @@ class DedupSpec extends AnyFunSuite {
       Seq(
         "d04" -> Dedup.ngramJaccard(Tables.documents(spark, sf)),
         "d09" -> Dedup.dupSpans(Tables.documents(spark, sf)),
-        "d02" -> Dedup.dedupMinhash(Tables.documents(spark, sf))
+        "d02" -> Dedup.dedupMinhash(Tables.documents(spark, sf)),
+        "d13" -> Dedup.ngramContainment(Tables.documents(spark, sf))
       ).foreach { case (name, df) =>
         df.collect() // AQE reuse is decided at stage materialization
         // the adaptive plan string appends the pre-AQE "Initial Plan"
@@ -628,6 +647,25 @@ class DedupSpec extends AnyFunSuite {
     assert(out(1L) === (("one two three four five", 5L, 10L)))
     assert(!out.contains(2L))
     assert(out(3L) === (("p q r s x y", 8L, 14L)))
+  }
+
+  test("t15: maxRep leaves an over-cap gram alone, scrubs at or under it") {
+    import spark.implicits._
+    val docs = Seq(
+      // "a b c" three times: every other trigram occurs once
+      (1L, "a b c x a b c y a b c z"),
+      // "d e f" and "e f g" twice each
+      (2L, "d e f g d e f g")
+    ).toDF("doc_id", "text")
+    def scrub(maxRep: Int) = Dedup.repetitionScrub(docs, maxRep = maxRep)
+      .collect().map(r => r.getLong(0) ->
+        ((r.getString(1), r.getLong(2), r.getLong(3)))).toMap
+    // over the cap (3 > 2) the gram never joins, so doc 1 is untouched;
+    // doc 2's grams sit at the cap and its later copy goes
+    assert(scrub(2) === Map(2L -> (("d e f g", 4L, 8L))))
+    // at the cap both later copies of the run go
+    assert(scrub(3) === Map(
+      1L -> (("a b c x y z", 6L, 12L)), 2L -> (("d e f g", 4L, 8L))))
   }
 
   test("t15: periodic self-overlap collapses, never to empty") {
