@@ -28,6 +28,10 @@ object JobSpec {
       params.get(key).map(parse).getOrElse(default)
     def str(key: String, default: String): String = get(key, default)(identity)
     def int(key: String, default: Int): Int = get(key, default)(_.toInt)
+    /** An int dial whose default is a rule of the operator, not a
+      * constant: None when the job leaves it unset.
+      */
+    def intOpt(key: String): Option[Int] = params.get(key).map(_.toInt)
     def long(key: String, default: Long): Long = get(key, default)(_.toLong)
     def double(key: String, default: Double): Double =
       get(key, default)(_.toDouble)
@@ -190,7 +194,7 @@ object JobSpec {
           delay = j.str("delay", "1 hour"),
           clickType = j.str("clickType", "click"),
           purchaseType = j.str("purchaseType", "purchase"),
-          statePartitions = j.int("statePartitions", 8)))),
+          statePartitions = j.intOpt("statePartitions")))),
     "st27_stream_ann_ingest" -> ((s, d, j) =>
       checked(j, "slices")(
         graft.streaming.StreamOps.streamAnnIngest(s, d,
@@ -296,38 +300,41 @@ object JobSpec {
     // and the stateful operator's partition sizing — the three
     // numbers a deployment actually tunes.
     //
-    // statePartitions SIZING RULE (r16 verdict #8; measured at sf10,
-    // recorded in BASELINE.md: 8→18.6 s, 16→11.1 s, 32→20.2 s — the
-    // crossover is real and cuts BOTH ways): the symmetric join
-    // keeps FOUR state stores per shuffle partition and commits a
-    // delta file per store per micro-batch, so the per-batch cost is
+    // statePartitions SIZING RULE: a stateful operator's shuffle
+    // partitions are its STATE STORES, and every micro-batch commits
+    // every store, idle or not (a delta file plus its checksum
+    // sidecar, each a create and a rename), so the floor is per
+    // store, not per row. The symmetric join keeps FOUR stores per
+    // partition, so the per-batch cost is
     //   max(state-commit floor ∝ statePartitions,
     //       join work / min(statePartitions, cores)).
-    // Size it to the PER-BATCH core need, not the cluster:
-    //   statePartitions ≈ clamp(batchRows / targetRowsPerTask,
-    //                           cores it should occupy, ~2×cores)
-    // — undersizing serializes join work, oversizing pays a commit
-    // floor per idle store. The default 8 prices the sf0.1 harness
-    // (2-file micro-batches); the sf10 harness measured its optimum
-    // at 16. The same dial (and rule) applies to st19's outer join
-    // and st23's timer sessionizer below.
+    // Left unset, the dial resolves in StreamOps to the session's
+    // cores capped at 8, min(8, defaultParallelism): at `local[4]`
+    // the fixed 8 it replaced made st18 commit 32 stores per batch,
+    // ~70 ms each, and a sweep put st18's median trigger at
+    // 1575 / 1239 / 1061 ms for 8 / 4 / 2 partitions. Undersizing
+    // serializes join work instead (sf10 at `local[32]`, BASELINE.md:
+    // 8→18.6 s, 16→11.1 s, 32→20.2 s), so a job whose batches carry
+    // more than its cores can use sets it, up to ~2×cores. The same
+    // dial and rule apply to st19's outer join, st23's timer
+    // sessionizer and st26's census.
     "st18_stream_join" -> ((s, d, j) =>
       checked(j, "horizonHours", "delay", "statePartitions")(
         streaming.StreamOps.streamStreamJoin(s, d,
           horizonHours = j.long("horizonHours", 24L),
           delay = j.str("delay", "1 hour"),
-          statePartitions = j.int("statePartitions", 8)))),
+          statePartitions = j.intOpt("statePartitions")))),
     "st19_stream_outer_join" -> ((s, d, j) =>
       checked(j, "horizonHours", "delay", "statePartitions")(
         streaming.StreamOps.streamStreamOuterJoin(s, d,
           horizonHours = j.long("horizonHours", 24L),
           delay = j.str("delay", "1 hour"),
-          statePartitions = j.int("statePartitions", 8)))),
+          statePartitions = j.intOpt("statePartitions")))),
     "st23_stream_session_timers" -> ((s, d, j) =>
       checked(j, "gapSeconds", "statePartitions")(
         streaming.StreamOps.streamSessionTimers(s, d,
           gapSeconds = j.long("gapSeconds", 1800L),
-          statePartitions = j.int("statePartitions", 8)))),
+          statePartitions = j.intOpt("statePartitions")))),
     // k27: the table's invariants ARE the config — rules arrive as
     // rule.<name> = <boolean SQL> repeated fields (p04's idiom), the
     // tolerance as a permille dial. Dial-scoped cacheKey: two rule

@@ -472,17 +472,6 @@ object SparkEntry {
        FROM f ASOF LEFT JOIN a
          ON f.user_id = a.user_id AND f.ts_us >= a.ts_us"""
 
-  /** Shared by d10 (batch incremental dedup) and st09 (streaming
-    * near-dup): both probe the same build-once bucketed index — the
-    * probe is batching-invariant, so one oracle covers both.
-    */
-  /** Shared by k12 (sequential partition-pruned apply) and st12 (the
-    * convergent streaming apply): both must land the identical
-    * post-merge state, rebuilt here relationally from the original
-    * table (delete seq 2 beats upsert seq 1; changes confined to the
-    * two changed langs; n_upserted is the SAME text-suffix LIKE both
-    * engines evaluate on the merged text).
-    */
   /** k12's latest-wins replay CTEs — ONE definition shared by the
     * k12/st12 oracles and k14's versioned-read oracle, mirroring the
     * shared latestOps/mergeLatest engine path. `base` rebuilds the
@@ -554,6 +543,13 @@ object SparkEntry {
        FROM merged
        WHERE ((doc_id % 97) + 97) % 97 = 7"""
 
+  /** Shared by k12 (sequential partition-pruned apply) and st12 (the
+    * convergent streaming apply): both must land the identical
+    * post-merge state, rebuilt here relationally from the original
+    * table (delete seq 2 beats upsert seq 1; changes confined to the
+    * two changed langs; n_upserted is the SAME text-suffix LIKE both
+    * engines evaluate on the merged text).
+    */
   private val k12Sql: String =
     s"""WITH $k12Ctes
        SELECT lang, count(*) AS n_docs,
@@ -601,17 +597,6 @@ object SparkEntry {
                   AS BIGINT) AS n_text_null
          FROM vs GROUP BY 1, 2"""
 
-  /** s01's exact top-k, parameterized on the query predicate. s06
-    * (the lossless IVF-PQ path) shares the whole replay but restricts
-    * queries to POSITIVE NORM: cosine is undefined for a zero-norm
-    * query, s01 degenerately emits its all-NULL-cosine rows (ranked
-    * by the vec_id tiebreak — the oracle's NULLS LAST replays it
-    * exactly), while the IVF machinery correctly never assigns or
-    * probes an undefined vector. The two paths agree bit-for-bit on
-    * every DEFINED query (spec-pinned), so s06's oracle states
-    * exactly that; the hostile corpus (which plants zero vectors on
-    * the query stride) is what forced the distinction.
-    */
   /** The registered stride+cap query predicate (VERDICT r17 #4),
     * spliced from Similarity.AnnMaxQueries so the oracle can never
     * drift from the engine's capped query set: every 50th vec_id
@@ -624,6 +609,17 @@ object SparkEntry {
     s"vec_id % 50 = 0 AND vec_id < ${50L *
       graft.operators.Similarity.AnnMaxQueries}"
 
+  /** s01's exact top-k, parameterized on the query predicate. s06
+    * (the lossless IVF-PQ path) shares the whole replay but restricts
+    * queries to POSITIVE NORM: cosine is undefined for a zero-norm
+    * query, s01 degenerately emits its all-NULL-cosine rows (ranked
+    * by the vec_id tiebreak — the oracle's NULLS LAST replays it
+    * exactly), while the IVF machinery correctly never assigns or
+    * probes an undefined vector. The two paths agree bit-for-bit on
+    * every DEFINED query (spec-pinned), so s06's oracle states
+    * exactly that; the hostile corpus (which plants zero vectors on
+    * the query stride) is what forced the distinction.
+    */
   private def annExactSql(queryPred: String): String =
     s"""WITH e AS (
          SELECT vec_id, embedding::DOUBLE[] AS v,
@@ -1236,6 +1232,10 @@ object SparkEntry {
          FROM lvl1 GROUP BY 1, 2"""
   }
 
+  /** Shared by d10 (batch incremental dedup) and st09 (streaming
+    * near-dup): both probe the same build-once bucketed index — the
+    * probe is batching-invariant, so one oracle covers both.
+    */
   private val d10Sql: String =
     """WITH sets AS (
          SELECT doc_id,

@@ -105,7 +105,8 @@ object StreamOps {
     * plan runs in append mode and the watermark evicts closed windows.
     */
   def streamWindow(spark: SparkSession, dir: String,
-      windowSeconds: Long = 21600L, statePartitions: Int = 8): DataFrame = {
+      windowSeconds: Long = 21600L,
+      statePartitions: Option[Int] = None): DataFrame = {
     runSizedStream(spark, s => eventStream(s, dir)
       .withWatermark("ts", "0 seconds")
       .groupBy(window(col("ts"), s"$windowSeconds seconds"), col("event_type"))
@@ -135,7 +136,7 @@ object StreamOps {
   def streamSliding(spark: SparkSession, dir: String,
       windowSeconds: Long = graft.operators.Pipeline.SlidingWindowSeconds,
       slideSeconds: Long = graft.operators.Pipeline.SlidingSlideSeconds,
-      statePartitions: Int = 8): DataFrame = {
+      statePartitions: Option[Int] = None): DataFrame = {
     runSizedStream(spark, s => eventStream(s, dir)
       .withWatermark("ts", "0 seconds")
       .groupBy(window(col("ts"), s"$windowSeconds seconds",
@@ -165,7 +166,8 @@ object StreamOps {
     * (values are 2-decimal), so the oracle is hash-exact.
     */
   def streamEnrich(spark: SparkSession, dir: String,
-      windowSeconds: Long = 21600L, statePartitions: Int = 8): DataFrame = {
+      windowSeconds: Long = 21600L,
+      statePartitions: Option[Int] = None): DataFrame = {
     runSizedStream(spark, { s =>
       val dim = broadcast(graft.Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_mktsegment")))
@@ -202,7 +204,8 @@ object StreamOps {
     * share the oracle).
     */
   def streamAsof(spark: SparkSession, dir: String,
-      anchorType: String = "signup", statePartitions: Int = 8): DataFrame = {
+      anchorType: String = "signup",
+      statePartitions: Option[Int] = None): DataFrame = {
     import spark.implicits._
     runSizedStream(spark, { s =>
     val src = eventStream(s, dir)
@@ -253,7 +256,7 @@ object StreamOps {
   def streamFunnel(spark: SparkSession, dir: String,
       steps: Seq[String] = Seq("signup", "view", "click", "purchase"),
       windowUs: Long = 7L * 24 * 3600 * 1000000L,
-      statePartitions: Int = 8): DataFrame = {
+      statePartitions: Option[Int] = None): DataFrame = {
     import spark.implicits._
     val UNSET = Long.MinValue
     val nSteps = steps.length
@@ -321,7 +324,8 @@ object StreamOps {
     * bounds reordering with a watermark.
     */
   def streamOutliers(spark: SparkSession, dir: String,
-      minPrior: Long = 10L, statePartitions: Int = 8): DataFrame = {
+      minPrior: Long = 10L,
+      statePartitions: Option[Int] = None): DataFrame = {
     import spark.implicits._
     runSizedStream(spark, { s =>
     val src = eventStream(s, dir)
@@ -421,7 +425,7 @@ object StreamOps {
     * not the representative rows themselves.
     */
   def streamDedup(spark: SparkSession, dir: String,
-      statePartitions: Int = 8): DataFrame =
+      statePartitions: Option[Int] = None): DataFrame =
     runSizedStream(spark, s => eventStream(s, dir)
       .select(col("user_id"), col("event_type"))
       .dropDuplicates("user_id", "event_type"),
@@ -501,7 +505,8 @@ object StreamOps {
     * active user — O(active users), not O(events).
     */
   def streamSessions(spark: SparkSession, dir: String,
-      gapSeconds: Long = 1800L, statePartitions: Int = 8): DataFrame = {
+      gapSeconds: Long = 1800L,
+      statePartitions: Option[Int] = None): DataFrame = {
     import spark.implicits._
     val gapUs = gapSeconds * 1000000L
 
@@ -986,7 +991,7 @@ object StreamOps {
   def streamHeavyHitters(spark: SparkSession, dir: String,
       shareDenom: Int = graft.operators.TextAnalysis.HeavyShareDenom,
       k: Int = graft.operators.TextAnalysis.HeavyK,
-      statePartitions: Int = 8): DataFrame = {
+      statePartitions: Option[Int] = None): DataFrame = {
     import spark.implicits._
     val docs = graft.Tables.documents(spark, dir)
     val stage = graft.Staging.memo("st13", dir) {
@@ -998,12 +1003,11 @@ object StreamOps {
     }
     // Sized state partitioning (runSizedStream's rationale): the MG
     // fold is keyed by lang, so only ≤ #langs stores are ever
-    // non-empty — the inherited 32 paid 32 state commits per batch
-    // for ≤ 5 working stores. The heavy tokenize/explode runs BEFORE
-    // the keyed shuffle at spread() width, so this dial does not
-    // bound batch CPU.
-    val child = childSession(spark)
-    child.conf.set("spark.sql.shuffle.partitions", statePartitions)
+    // non-empty, and each idle store still pays its commit per
+    // batch. The heavy tokenize/explode runs BEFORE the keyed
+    // shuffle at spread() width, so this count does not bound batch
+    // CPU.
+    val child = childSession(spark, statePartitions)
     val src = child.readStream
       .schema("doc_id BIGINT, lang STRING, text STRING")
       .option("maxFilesPerTrigger", HarnessFilesPerTrigger)
@@ -1233,35 +1237,35 @@ object StreamOps {
         joinType)
   }
 
-  /** Run a stateful stream to a memory sink on a child session whose
-    * shuffle partitioning — which for a stateful operator is the
-    * STATE STORE COUNT, baked into the checkpoint at first start — is
-    * a sized dial rather than the inherited session default. Every
-    * micro-batch commits a delta file per store, and the symmetric
-    * join (st18/st19) keeps FOUR stores per shuffle partition
-    * (keyToNumValues + keyWithIndex, each side), so the per-batch
-    * floor ∝ stores × batches. The JobSpec sizing rule (JobSpec.scala
-    * statePartitions note) applies: size to per-batch core need, not
-    * to the session's scan parallelism. Measured in r18 at sf0.1
-    * (OPTIMIZATION_r18.md, Batch 1): the st01-shaped windowed
-    * aggregation reads 2.72 s at the inherited 32 vs 1.71 s at 8 —
-    * pure state-commit floor, the same 3× per-store effect r13
-    * measured for the join twins. The dial stays a parameter with the
-    * st18/st19 default (8); a 100 TB deployment sizes it to its
-    * executor cores (the sf10 crossover in the same record:
-    * 8→18.6 s, 16→11.1 s, 32→20.2 s — undersizing punishes large
-    * scale, oversizing punishes the floor). The conf flip happens on
-    * an isolated CHILD session (childSession), never
-    * set-then-restored on the caller's — a query planned concurrently
-    * on the shared session must not inherit the stream's sizing.
+  /** Run a stateful stream to a memory sink on a child session
+    * (childSession) whose shuffle partitioning is the stream's state
+    * partition count (statePartitionCount). For a stateful operator
+    * that count is the STATE STORE COUNT, baked into the checkpoint
+    * at first start, and every micro-batch commits every store, idle
+    * or not: a delta file plus its checksum sidecar
+    * (`ChecksumCheckpointFileManager`), each a create and a rename.
+    * On a local checkpoint without the native Hadoop library,
+    * `RawLocalFileSystem` forks a `chmod` per create and a `readlink`
+    * per rename, so the commit floor is per STORE, not per row. The
+    * symmetric join (st18/st19) keeps FOUR stores per partition
+    * (keyToNumValues + keyWithIndex, each side): at the old fixed 8
+    * on `local[4]`, st18 committed 32 stores per batch, read
+    * 2064–2385 ms of `commitTimeMs` per batch (~70 ms a store), and
+    * its 8 state tasks ran 3.6–4.0 s for 0.27–0.42 s of CPU. The
+    * same `local[4]` sweep put st18's pooled median
+    * `triggerExecution` at 1575 / 1239 / 1061 ms for 8 / 4 / 2
+    * partitions. The default still stops at the cores, not below:
+    * a batch that carries real work runs one state task per
+    * partition and serializes under the cores — the sf10 crossover
+    * at `local[32]` (BASELINE.md) read 8→18.6 s, 16→11.1 s,
+    * 32→20.2 s.
     */
   private def runSizedStream(spark: SparkSession,
       mk: SparkSession => DataFrame, sinkPrefix: String,
-      mode: OutputMode, statePartitions: Int,
+      mode: OutputMode, statePartitions: Option[Int],
       noDataBatches: Boolean = true): DataFrame = {
     val sink = s"${sinkPrefix}_${System.nanoTime()}"
-    val child = childSession(spark)
-    child.conf.set("spark.sql.shuffle.partitions", statePartitions)
+    val child = childSession(spark, statePartitions)
     // A stream whose output is entirely INPUT-driven (the inner
     // symmetric join: matches emit during data processing; watermark
     // eviction only garbage-collects state, producing no rows) may
@@ -1309,17 +1313,36 @@ object StreamOps {
     * catalog reachability through the returned DataFrame), starts
     * from `newSession`'s SparkConf defaults, then copies the
     * parent's MODIFIABLE runtime confs so a spec's session-scoped
-    * settings (timezone, broadcast threshold) carry over. The child
-    * is where a stream sizes its state partitioning or swaps the
-    * state-store provider — the shared session never sees either.
+    * settings (timezone, broadcast threshold) carry over. Its shuffle
+    * partitioning is the stream's state partition count, and it is
+    * where a stream swaps the state-store provider — the shared
+    * session never sees either, so a query planned concurrently on
+    * it does not inherit the stream's sizing.
     */
-  private def childSession(spark: SparkSession): SparkSession = {
+  private def childSession(spark: SparkSession,
+      statePartitions: Option[Int]): SparkSession = {
     val child = spark.newSession()
     spark.conf.getAll.foreach { case (k, v) =>
       if (child.conf.isModifiable(k)) child.conf.set(k, v)
     }
+    child.conf.set("spark.sql.shuffle.partitions",
+      statePartitionCount(spark, statePartitions))
     child
   }
+
+  /** The one state partition rule of every stateful stream: the
+    * caller's count, else the session's cores capped at 8,
+    * `min(8, defaultParallelism)`. Never more stores than cores, since
+    * each idle store still pays its per-batch commit (runSizedStream),
+    * and never more than the old fixed default; a deployment whose
+    * batches carry more work than its cores sets the count itself.
+    * Results do not depend on it (StreamOpsSpec runs st02 and st18 at
+    * 1, the default and 8).
+    */
+  private def statePartitionCount(spark: SparkSession,
+      statePartitions: Option[Int]): Int =
+    statePartitions.getOrElse(
+      math.min(8, spark.sparkContext.defaultParallelism))
 
   /** st18_stream_join — the watermarked STREAM-STREAM join: every
     * purchase attributed to the same user's clicks in the preceding
@@ -1353,7 +1376,7 @@ object StreamOps {
   def streamStreamJoin(spark: SparkSession, dir: String,
       horizonHours: Long = 24L, delay: String = "1 hour",
       clickType: String = "click", purchaseType: String = "purchase",
-      statePartitions: Int = 8): DataFrame = {
+      statePartitions: Option[Int] = None): DataFrame = {
     runSizedStream(spark,
       s => streamJoinSides(s, dir, horizonHours, delay,
         clickType, purchaseType, "inner"),
@@ -1449,7 +1472,7 @@ object StreamOps {
   def streamStreamOuterJoin(spark: SparkSession, dir: String,
       horizonHours: Long = 24L, delay: String = "1 hour",
       clickType: String = "click", purchaseType: String = "purchase",
-      statePartitions: Int = 8): DataFrame = {
+      statePartitions: Option[Int] = None): DataFrame = {
     runSizedStream(spark,
       s => streamJoinSides(s, dir, horizonHours, delay,
         clickType, purchaseType, "left_outer", sentinel = true),
@@ -1657,16 +1680,19 @@ object StreamOps {
     * corpus's last event: every user whose session-expiry timer is
     * still ahead of that watermark keeps state — the live "open
     * session" population a 24/7 deployment holds at any instant,
-    * frozen for inspection. Keyed by dial set (the checkpoint is the
-    * artifact st24 reads).
+    * frozen for inspection. Keyed by dial set, with the state
+    * partition count resolved (the checkpoint is the artifact st24
+    * reads).
     */
-  private def openSessionCheckpoint(spark: SparkSession,
-      dir: String, gapSeconds: Long, statePartitions: Int): String =
-    graft.Staging.memo("st24", dir, gapSeconds, statePartitions)(
+  private def openSessionCheckpoint(spark: SparkSession, dir: String,
+      gapSeconds: Long, statePartitions: Option[Int]): String = {
+    val n = statePartitionCount(spark, statePartitions)
+    graft.Staging.memo("st24", dir, gapSeconds, n)(
       drainOpenSessions(spark,
         s"${orderedEventStage(spark, dir)}/f*",
         graft.Tables.events(spark, dir).schema,
-        gapSeconds * 1000000L, statePartitions))
+        gapSeconds * 1000000L, n))
+  }
 
   /** The core st24 drain over an arbitrary staged file glob —
     * factored so the boundary-pinning specs can run it over PLANTED
@@ -1678,8 +1704,7 @@ object StreamOps {
       gapUs: Long, statePartitions: Int): String = {
     import org.apache.spark.sql.streaming.TimeMode
     val ckpt = graft.Staging.dir("graft_st24_ckpt_")
-    val child = childSession(spark)
-    child.conf.set("spark.sql.shuffle.partitions", statePartitions)
+    val child = childSession(spark, Some(statePartitions))
     child.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming." +
         "state.RocksDBStateStoreProvider")
@@ -1740,7 +1765,8 @@ object StreamOps {
     * itself.
     */
   def stateCensus(spark: SparkSession, dir: String,
-      gapSeconds: Long = 1800L, statePartitions: Int = 8): DataFrame = {
+      gapSeconds: Long = 1800L,
+      statePartitions: Option[Int] = None): DataFrame = {
     val ckpt = openSessionCheckpoint(spark, dir, gapSeconds,
       statePartitions)
     spark.read.format("statestore")
@@ -1754,19 +1780,19 @@ object StreamOps {
     * EXPLICIT checkpoint and return its path: the drain stops at the
     * corpus's last real event, so the four join state stores hold
     * exactly the live population a 24/7 attribution join carries at
-    * any instant — frozen for st26's census. Keyed by dial set (the
-    * checkpoint is the artifact, st24's discipline).
+    * any instant — frozen for st26's census. Keyed by dial set, with
+    * the state partition count resolved (the checkpoint is the
+    * artifact, st24's discipline).
     */
   private def joinStateCheckpoint(spark: SparkSession,
-      dir: String, horizonHours: Long = 24L, delay: String = "1 hour",
-      clickType: String = "click", purchaseType: String = "purchase",
-      statePartitions: Int = 8): String =
+      dir: String, horizonHours: Long, delay: String,
+      clickType: String, purchaseType: String,
+      statePartitions: Option[Int]): String = {
+    val n = statePartitionCount(spark, statePartitions)
     graft.Staging.memo("st26", dir, horizonHours, delay, clickType,
-        purchaseType, statePartitions) {
+        purchaseType, n) {
         val ckpt = graft.Staging.dir("graft_st26_ckpt_")
-        val child = childSession(spark)
-        child.conf.set("spark.sql.shuffle.partitions",
-          statePartitions.toString)
+        val child = childSession(spark, Some(n))
         val sink = s"st26_mem_${System.nanoTime()}"
         val q = streamJoinSides(child, dir, horizonHours, delay,
             clickType, purchaseType, "inner")
@@ -1780,6 +1806,7 @@ object StreamOps {
         q.awaitTermination()
         ckpt
       }
+  }
 
   /** st26_join_state_census — st24's checkpoint introspection over
     * the state the 100 TB deployment actually worries about: the
@@ -1823,7 +1850,7 @@ object StreamOps {
   def joinStateCensus(spark: SparkSession, dir: String,
       horizonHours: Long = 24L, delay: String = "1 hour",
       clickType: String = "click", purchaseType: String = "purchase",
-      statePartitions: Int = 8): DataFrame = {
+      statePartitions: Option[Int] = None): DataFrame = {
     val ckpt = joinStateCheckpoint(spark, dir, horizonHours, delay,
       clickType, purchaseType, statePartitions)
     def side(name: String, pre: String, label: String): DataFrame =
@@ -1864,16 +1891,17 @@ object StreamOps {
     * monitor over any user cardinality a state store holds.
     */
   def streamSessionTimers(spark: SparkSession, dir: String,
-      gapSeconds: Long = 1800L, statePartitions: Int = 8): DataFrame = {
+      gapSeconds: Long = 1800L,
+      statePartitions: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.streaming.TimeMode
     val schema = graft.Tables.events(spark, dir).schema
     val stage = sentinelEventStage(spark, dir, "click", "purchase")
     // transformWithState requires the RocksDB state store; the
-    // partition sizing is st18's dial. Both confs live on an
-    // isolated child session (childSession) so nothing planned
-    // concurrently on the shared session inherits them.
-    val child = childSession(spark)
-    child.conf.set("spark.sql.shuffle.partitions", statePartitions)
+    // partition count follows statePartitionCount like st18's. Both
+    // confs live on an isolated child session (childSession) so
+    // nothing planned concurrently on the shared session inherits
+    // them.
+    val child = childSession(spark, statePartitions)
     child.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming." +
         "state.RocksDBStateStoreProvider")

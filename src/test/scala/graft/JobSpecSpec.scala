@@ -108,6 +108,28 @@ class JobSpecSpec extends AnyFunSuite {
     }
   }
 
+  test("an unset statePartitions takes the session rule; a set one is kept") {
+    // st26 memoizes its explicit checkpoint under the RESOLVED count,
+    // so the staged entry names the count each job ran at
+    val spec = writeSpec(
+      """{"op": "st26_join_state_census"}""",
+      """{"op": "st26_join_state_census", "params": {"statePartitions": "3"}}""")
+    val Seq(unset, set) = JobSpec.runAll(spark, sf, spec)
+      .map(_._2.collect().map(_.toSeq).toSet)
+    assert(unset.nonEmpty && unset === set,
+      "the census must not depend on the state partition count")
+    def partitions(n: Int): Int = {
+      val ckpt = graft.Staging.staged[String]("st26", sf, 24L, "1 hour",
+        "click", "purchase", n)
+      assert(ckpt.isDefined, s"no st26 checkpoint staged at $n partitions")
+      new java.io.File(s"${ckpt.get}/state/0").listFiles()
+        .count(p => p.isDirectory && p.getName.forall(_.isDigit))
+    }
+    val rule = math.min(8, spark.sparkContext.defaultParallelism)
+    assert(partitions(rule) === rule)
+    assert(partitions(3) === 3)
+  }
+
   test("every configurable op is a registered query (dispatch stays honest)") {
     val registered = SparkEntry.queries.keySet
     val orphans = JobSpec.configurable -- registered

@@ -552,4 +552,45 @@ class StreamOpsSpec extends AnyFunSuite {
       "no pair straddles the half-way arrival boundary — " +
         "cross-micro-batch join state was not exercised")
   }
+
+  /** Numbered state partition dirs under each of `root`'s stateful
+    * query checkpoints whose name starts with `prefix`.
+    */
+  private def statePartitionDirs(root: String, prefix: String): Seq[Int] =
+    new java.io.File(root).listFiles().toSeq
+      .filter(_.getName.startsWith(prefix))
+      .map(q => new java.io.File(q, "state/0").listFiles()
+        .count(p => p.isDirectory && p.getName.forall(_.isDigit)))
+
+  test("st02/st18: a default run commits min(8, cores) state partitions") {
+    // Every micro-batch commits every state store, so an unset count
+    // resolves to the session's cores capped at 8; the session-wide
+    // checkpoint location makes each query's state dirs countable.
+    val key = "spark.sql.streaming.checkpointLocation"
+    val root = graft.Staging.dir("graft_statepart_")
+    spark.conf.set(key, root)
+    try {
+      assert(StreamOps.streamSessions(spark, sf).count() > 0)
+      assert(StreamOps.streamStreamJoin(spark, sf).count() > 0)
+    } finally spark.conf.unset(key)
+    val want = math.min(8, spark.sparkContext.defaultParallelism)
+    assert(statePartitionDirs(root, "st02_mem_") === Seq(want))
+    assert(statePartitionDirs(root, "st18_mem_") === Seq(want))
+  }
+
+  test("st02/st18: rows do not depend on the state partition count") {
+    val counts = Seq(Some(1), None, Some(8))
+    def rowsAt(run: Option[Int] => Array[Row]): Seq[Seq[Seq[Any]]] =
+      counts.map(n => sortedRows(run(n)))
+    val st02 = rowsAt(n =>
+      StreamOps.streamSessions(spark, sf, statePartitions = n).collect())
+    val st18 = rowsAt(n =>
+      StreamOps.streamStreamJoin(spark, sf, statePartitions = n).collect())
+    for ((name, rows) <- Seq("st02" -> st02, "st18" -> st18)) {
+      assert(rows.head.nonEmpty, name)
+      counts.zip(rows).tail.foreach { case (n, r) =>
+        assert(r === rows.head, s"$name at statePartitions = $n")
+      }
+    }
+  }
 }
