@@ -265,9 +265,11 @@ object JobSpec {
     "p08_split" -> ((s, d, j) =>
       checked(j, "testPermille", "valPermille", "salt")(
         operators.Corpus.split(Tables.documents(s, d),
-          testPermille = j.int("testPermille", 10),
-          valPermille = j.int("valPermille", 50),
-          salt = j.long("salt", 9176L)))),
+          testPermille = j.int("testPermille",
+            operators.Corpus.SplitTestPermille),
+          valPermille = j.int("valPermille",
+            operators.Corpus.SplitValPermille),
+          salt = j.long("salt", operators.Corpus.SplitSalt)))),
     "p15_importance_sample" -> ((s, d, j) =>
       checked(j, "targetSource", "buckets", "topN")(
         operators.Corpus.importanceSample(Tables.documents(s, d),

@@ -1106,14 +1106,14 @@ object SparkEntry {
     * (p01's quality score, p03's dedup closure, p08's salted-hash
     * split, p13's integer rate derivation, t07's packing window) and
     * interpolated from the SAME constants the operator runs with
-    * (Corpus.Build* / Budget*).
+    * (Corpus.Build* / Split* / Budget*).
     */
   private val p14Sql: String = {
     val minQ = graft.operators.Corpus.BuildMinQualityBp / 10000.0
     val budget = graft.operators.Corpus.BuildBudgetTokens
-    val test = graft.operators.Corpus.BuildTestPermille
-    val valP = graft.operators.Corpus.BuildValPermille
-    val sSalt = graft.operators.Corpus.BuildSplitSalt
+    val test = graft.operators.Corpus.SplitTestPermille
+    val valP = graft.operators.Corpus.SplitValPermille
+    val sSalt = graft.operators.Corpus.SplitSalt
     val cases = graft.operators.Corpus.BudgetTargets.toSeq.sortBy(_._1)
       .map { case (s, v) => s"WHEN '$s' THEN $v" }.mkString(" ")
     val dflt = graft.operators.Corpus.BudgetDefaultTargetPermille
@@ -3722,12 +3722,13 @@ object SparkEntry {
          FROM binned CROSS JOIN tot""",
     // p08: the split hash is exact integer arithmetic (p04's salted
     // double-multiply, own salt) — both engines compute the identical
-    // bucket, so assignment is value-exact.
+    // bucket, so assignment is value-exact. p08 and p10 are built
+    // from Corpus's Split* geometry (the p11 discipline).
     // p10: d07's transitive-closure CTE resolves clusters, then p08's
     // exact hash arithmetic splits on the REPRESENTATIVE id — the
     // engine hashes min-label components the same way.
     "p10_leak_safe_split" ->
-      """WITH RECURSIVE sets AS (
+      raw"""WITH RECURSIVE sets AS (
            SELECT doc_id,
                   list_distinct([array_to_string(t[i:i+2], ' ')
                                  for i in range(1, len(t) - 1)]) AS sh
@@ -3758,20 +3759,20 @@ object SparkEntry {
                   coalesce(c.cluster_rep, d.doc_id) AS rep_id
            FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id)
          SELECT doc_id, rep_id, lang, source,
-                CASE WHEN h < 10 THEN 'test'
-                     WHEN h < 60 THEN 'val'
+                CASE WHEN h < ${Corpus.SplitTestPermille} THEN 'test'
+                     WHEN h < ${Corpus.SplitTestPermille + Corpus.SplitValPermille} THEN 'val'
                      ELSE 'train' END AS split
          FROM (SELECT doc_id, rep_id, lang, source,
-                      (((((rep_id % 1000000007 + 9176) % 1000000007) * 2654435761)
+                      (((((rep_id % 1000000007 + ${Corpus.SplitSalt}) % 1000000007) * 2654435761)
                           % 1000000007) * 2654435761) % 1000 AS h
                FROM rep) t""",
     "p08_split" ->
-      """SELECT doc_id, lang, source,
-                CASE WHEN h < 10 THEN 'test'
-                     WHEN h < 60 THEN 'val'
+      raw"""SELECT doc_id, lang, source,
+                CASE WHEN h < ${Corpus.SplitTestPermille} THEN 'test'
+                     WHEN h < ${Corpus.SplitTestPermille + Corpus.SplitValPermille} THEN 'val'
                      ELSE 'train' END AS split
          FROM (SELECT doc_id, lang, source,
-                      (((((doc_id % 1000000007 + 9176) % 1000000007) * 2654435761)
+                      (((((doc_id % 1000000007 + ${Corpus.SplitSalt}) % 1000000007) * 2654435761)
                           % 1000000007) * 2654435761) % 1000 AS h
                FROM documents)""",
     // p12: p10's closure CTE → cluster sizes over rep_id → the exact

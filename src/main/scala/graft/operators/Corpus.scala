@@ -4,8 +4,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.expressions.Window
 
-import graft.functions.TextOps
+import graft.functions.{ShingleExprs, TextOps}
 
 /** End-to-end corpus preparation (p01) and sketch-based metrics
   * (q19) — the composed form of the per-step operators, mirroring how
@@ -23,9 +24,7 @@ object Corpus {
     * aggregation (no window sort).
     */
   def corpusClean(documents: DataFrame, minQuality: Double = 0.5): DataFrame = {
-    val kept = TextAnalysis
-      .qualityScore(documents, passthrough = Seq("lang", "source", "text"))
-      .filter(col("quality_score") >= minQuality)
+    val kept = qualityGate(documents, minQuality)
       .select(col("doc_id"), col("lang"), col("source"),
         col("n_tokens"), col("quality_score"),
         xxhash64(TextOps.normText(col("text"))).as("text_hash"))
@@ -54,6 +53,17 @@ object Corpus {
           sum(round(col("r.quality_score") * 10000, 0).cast("long")) /
             count(lit(1)), 0) / 10000.0).as("avg_quality"))
   }
+
+  /** The quality gate p01 and p14 clean with: t02's score over
+    * (doc_id, lang, source, text), keeping rows scoring `minQuality` or
+    * more. A NULL score (NULL or blank text) fails the comparison, so
+    * unscorable documents never pass.
+    */
+  private[graft] def qualityGate(documents: DataFrame,
+      minQuality: Double): DataFrame =
+    TextAnalysis
+      .qualityScore(documents, passthrough = Seq("lang", "source", "text"))
+      .filter(col("quality_score") >= minQuality)
 
   /** p02_stratified_sample — reproducible per-stratum sampling: keep
     * a deterministic ~rate fraction of every (lang) stratum by
@@ -133,16 +143,14 @@ object Corpus {
     * can't be a groupBy+join-back without re-reading the corpus —
     * the naive composition `d01 → semi-join → d04` scans the corpus
     * three times and ships full TEXT through the semi-join exchange).
-    * Survivor shingle sets then feed d04's candidate pipeline
-    * directly (`ngramJaccardFromSets`); the fuzzy layer's
-    * `dropped`/`reps` sides are DUP-GRAPH-sized (documents with ≥1
+    * Survivor shingle sets then feed the fuzzy layer directly
+    * (`fuzzyGroups`, shared with p14); its drop (`fuzzyDrops`) and
+    * `reps` sides are DUP-GRAPH-sized (documents with ≥1
     * near-dup — a tiny fraction of any real corpus), so the final
     * anti/left joins broadcast; the pair join is bounded by maxDf +
     * length pruning as in d04.
     */
   def dedupCorpus(documents: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.{ShingleExprs, TextOps}
     // one scan: text reduced to (normText hash, shingle digests);
     // short docs (< n tokens) keep an empty sh — they participate in
     // exact dedup but can never fuzzy-pair.
@@ -151,22 +159,19 @@ object Corpus {
       xxhash64(TextOps.normText(col("text"))).as("nh"),
       ShingleExprs.shingleHashSet(col("text"), 3).as("sh"))
     val surv = Window.partitionBy(col("nh"))
-    // NULLS-LAST survivor pick: a keyless doc must still survive when
-    // it is its group's only member (the oracle's min(doc_id) emits
-    // the NULL row; a bare min-over-window would silently drop it)
+    // NULLS-LAST survivor pick, unlike buildDedupSets' window: p03's
+    // oracle (min(doc_id)) keeps a NULL-id singleton, which a bare
+    // min-over-window would drop; p14's oracle drops that row.
     val ord = coalesce(col("doc_id"), lit(Long.MaxValue))
     val sets = enriched
       .withColumn("_min", min(ord).over(surv))
       .filter(ord === col("_min"))
       .select(col("doc_id"), col("sh"), size(col("sh")).as("nsh"))
-    val groups = Dedup.dedupGroups(Dedup.ngramJaccardFromSets(
-      sets.filter(col("nsh") > 0)))
-    val dropped = groups.filter(col("doc_id") =!= col("cluster_rep"))
-      .select(col("doc_id"))
+    val groups = fuzzyGroups(sets)
     val reps = groups.filter(col("doc_id") === col("cluster_rep"))
       .select(col("doc_id"), col("cluster_rep"))
     sets.select(col("doc_id"))
-      .join(dropped, Seq("doc_id"), "left_anti")
+      .join(fuzzyDrops(groups), Seq("doc_id"), "left_anti")
       .join(reps, Seq("doc_id"), "left")
   }
 
@@ -262,7 +267,6 @@ object Corpus {
       strata: Seq[String], orderCol: String, valueCol: String,
       outCol: String, buckets: Int = 64,
       boundsSrc: Option[(DataFrame, Seq[String])] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val sCols = strata.map(col)
     val (bSrc, bKeys) = boundsSrc.getOrElse((df, strata))
     val bounds = bSrc.groupBy(bKeys.map(col): _*)
@@ -357,15 +361,34 @@ object Corpus {
   def mixtureSample(documents: DataFrame,
       rates: Map[String, Int] =
         Map("src0" -> 800, "src1" -> 500, "src2" -> 250),
-      defaultPermille: Int = 100, salt: Long = 137L): DataFrame = {
-    val permille = rates.toSeq.sortBy(_._1)
-      .foldLeft(lit(defaultPermille)) { case (acc, (src, r)) =>
-        when(col("source") === src, lit(r)).otherwise(acc)
-      }
+      defaultPermille: Int = 100, salt: Long = 137L): DataFrame =
     documents
       .select(col("doc_id"), col("lang"), col("source"))
-      .filter(saltedBucket(col("doc_id"), salt, 1000L) < permille)
-  }
+      .filter(saltedBucket(col("doc_id"), salt, 1000L) <
+        bySource(rates, defaultPermille))
+
+  /** The per-source dial the mixture operators (p04, p11, p13, p14)
+    * read: `perSource(source)`, else `default` (a NULL source too), as
+    * one CASE over the sources in sorted order, so the plan does not
+    * depend on the map's iteration order.
+    */
+  private[graft] def bySource(perSource: Map[String, Int],
+      default: Int): Column =
+    perSource.toSeq.sortBy(_._1).foldLeft(lit(default)) {
+      case (acc, (src, v)) => when(col("source") === src, lit(v)).otherwise(acc)
+    }
+
+  /** `df`'s rows, each repeated `nCopies` times with its 0-based copy
+    * index as `epoch`, keeping the columns `keep`: map-side, through
+    * explode(sequence), so the fan-out is bounded by the copy count
+    * (the q38 replica discipline). Rows with no copy drop out.
+    */
+  private def explodeEpochs(df: DataFrame, nCopies: Column,
+      keep: Seq[String]): DataFrame =
+    df.withColumn("n_copies", nCopies)
+      .filter(col("n_copies") > 0)
+      .select(keep.map(col) :+ explode(sequence(lit(0L),
+        col("n_copies").cast("long") - 1)).as("epoch"): _*)
 
   /** p11_epoch_mixture geometry — shared with the registered oracle
     * (SparkEntry builds the SQL from THESE constants, the
@@ -387,9 +410,8 @@ object Corpus {
     * (permille ≤ 1000); this operator is the full budget, and p04's
     * downsampling falls out as the weight < 1000 special case.
     *
-    * Mechanics: ⌊w⌋ full copies replicate MAP-SIDE via
-    * explode(sequence) — the q38 replica discipline, fan-out bounded
-    * by the weight — and the fractional epoch admits a document iff
+    * Mechanics: ⌊w⌋ full copies replicate MAP-SIDE (explodeEpochs)
+    * and the fractional epoch admits a document iff
     * its `saltedBucket` under p11's OWN salt lands below w mod 1000,
     * so the fractional slice is deterministic, reproducible, and
     * independent of p02/p04/p08's layers (the double-multiply
@@ -406,26 +428,16 @@ object Corpus {
   def epochMixture(documents: DataFrame,
       weights: Map[String, Int] = EpochWeights,
       defaultPermille: Int = EpochDefaultPermille,
-      salt: Long = EpochSalt): DataFrame = {
-    val sorted = weights.toSeq.sortBy(_._1)
-    val full = sorted.foldLeft(lit(defaultPermille / 1000)) {
-      case (acc, (src, w)) =>
-        when(col("source") === src, lit(w / 1000)).otherwise(acc)
-    }
-    val fracm = sorted.foldLeft(lit(defaultPermille % 1000)) {
-      case (acc, (src, w)) =>
-        when(col("source") === src, lit(w % 1000)).otherwise(acc)
-    }
-    documents
-      .select(col("doc_id"), col("source"))
-      .withColumn("n_copies", full +
-        when(saltedBucket(col("doc_id"), salt, 1000L) < fracm, 1)
-          .otherwise(0))
-      .filter(col("n_copies") > 0)
-      .select(col("doc_id"), col("source"),
-        explode(sequence(lit(0L),
-          col("n_copies").cast("long") - 1)).as("epoch"))
-  }
+      salt: Long = EpochSalt): DataFrame =
+    // Truncating DIV and remainder, not rateCopies' pmod: the two agree
+    // on every weight >= 0, but a negative weight would change rows.
+    explodeEpochs(
+      documents.select(col("doc_id"), col("source"),
+        bySource(weights, defaultPermille).as("wm")),
+      expr("wm DIV 1000") +
+        when(saltedBucket(col("doc_id"), salt, 1000L) < col("wm") % 1000, 1)
+          .otherwise(0),
+      Seq("doc_id", "source"))
 
   /** p13_token_mixture geometry — shared with the registered oracle
     * (SparkEntry builds the SQL from THESE constants, the p11
@@ -454,13 +466,10 @@ object Corpus {
     * per-mille of epochs — a source holding little token mass but a
     * big target share repeats (up to `BudgetMaxRatePermille`), a
     * heavy source downsamples, exactly the knob a token-budgeted
-    * pretraining run turns. Admission and replication then reuse
-    * p11's geometry verbatim (⌊r⌋ map-side copies + salted-hash
-    * fractional epoch under p13's OWN salt).
-    *
-    * Every step is INTEGER arithmetic (two floor divisions, ratio
-    * capped at BudgetTCap) so the oracle replays it exactly; the
-    * divisions bound intermediates inside LONG at any corpus size.
+    * pretraining run turns. The rate table is `tokenRates`; admission
+    * and replication are `rateCopies` (⌊r⌋ map-side copies + a
+    * salted-hash fractional epoch under p13's OWN salt). p14 runs the
+    * same two rules on its train slice.
     *
     * Scale shape: pass 1 reads (source, text) once — one algebraic
     * aggregate to source-cardinality rows; the rate table derives on
@@ -485,11 +494,25 @@ object Corpus {
       .groupBy(col("source"))
       .agg(sum(col("nt")).as("toks"))
       .localCheckpoint(true)
+    rateCopies(
+      documents.select(col("doc_id"), col("source")),
+      tokenRates(perSrc, targets, defaultTargetPermille, betaPermille),
+      salt, Seq("doc_id", "source"))
+  }
+
+  /** p13's rate table, (source, r): from a (source, toks) frame of
+    * per-source token mass, each source's epoch rate in per-mille,
+    * r = min(β·w_s·min(1000·T/T_s, BudgetTCap) DIV 10^6,
+    * BudgetMaxRatePermille), with w_s the source's target share
+    * (`bySource`) and T the sum of `toks`. Every step is INTEGER
+    * arithmetic (two floor divisions, the ratio capped at BudgetTCap)
+    * so the oracle replays it exactly; the divisions bound
+    * intermediates inside LONG at any corpus size. Metadata-sized:
+    * one row per source, broadcast by `rateCopies`.
+    */
+  private[graft] def tokenRates(perSrc: DataFrame, targets: Map[String, Int],
+      defaultTargetPermille: Int, betaPermille: Int): DataFrame = {
     val total = perSrc.agg(sum(col("toks")).as("t_corpus"))
-    val w = targets.toSeq.sortBy(_._1)
-      .foldLeft(lit(defaultTargetPermille)) { case (acc, (s, v)) =>
-        when(col("source") === s, lit(v)).otherwise(acc)
-      }
     // A source with UNMEASURABLE token mass (all-null texts → toks
     // null; zero can't occur, any non-null text tokenizes to ≥ 1)
     // contributes NOTHING to a token-budget mixture — without this
@@ -497,27 +520,31 @@ object Corpus {
     // the CAP, flooding the mix with 4 copies of every token-less
     // doc (and DuckDB/Spark least() null semantics differ, so the
     // oracle could diverge).
-    val rates = perSrc.crossJoin(broadcast(total))
+    perSrc.crossJoin(broadcast(total))
       .filter(col("toks").isNotNull && col("toks") > 0)
-      .withColumn("w_permille", w.cast("long"))
+      .withColumn("w_permille",
+        bySource(targets, defaultTargetPermille).cast("long"))
       .withColumn("tr",
         least(expr("(t_corpus * 1000) DIV toks"), lit(BudgetTCap)))
       .withColumn("r",
         least(expr(s"($betaPermille * w_permille * tr) DIV 1000000"),
           lit(BudgetMaxRatePermille)))
       .select(col("source"), col("r"))
-    documents
-      .select(col("doc_id"), col("source"))
-      .join(broadcast(rates), Seq("source"))
-      .withColumn("n_copies",
-        expr("r DIV 1000") +
-          when(saltedBucket(col("doc_id"), salt, 1000L) <
-            pmod(col("r"), lit(1000L)), 1L).otherwise(0L))
-      .filter(col("n_copies") > 0)
-      .select(col("doc_id"), col("source"),
-        explode(sequence(lit(0L),
-          col("n_copies").cast("long") - 1)).as("epoch"))
   }
+
+  /** p13's replication: each row of `docs` (doc_id, source, …) takes
+    * its source's rate r from `rates` (`tokenRates`; a source with no
+    * rate drops out) and is copied r DIV 1000 times, plus one
+    * fractional copy when its `saltedBucket` under `salt` lands below
+    * r mod 1000 (`explodeEpochs`, keeping `keep`).
+    */
+  private[graft] def rateCopies(docs: DataFrame, rates: DataFrame, salt: Long,
+      keep: Seq[String]): DataFrame =
+    explodeEpochs(docs.join(broadcast(rates), Seq("source")),
+      expr("r DIV 1000") +
+        when(saltedBucket(col("doc_id"), salt, 1000L) <
+          pmod(col("r"), lit(1000L)), 1L).otherwise(0L),
+      keep)
 
   /** p08_split — deterministic train/val/test assignment: every
     * document lands in exactly ONE split by thresholding the same
@@ -530,34 +557,58 @@ object Corpus {
     * held-out set trustworthy — `sample()`-style splits depend on
     * partitioning and are unrepeatable.
     */
-  def split(documents: DataFrame, testPermille: Int = 10,
-      valPermille: Int = 50, salt: Long = 9176L): DataFrame = {
-    val h = saltedBucket(col("doc_id"), salt, 1000L)
+  def split(documents: DataFrame, testPermille: Int = SplitTestPermille,
+      valPermille: Int = SplitValPermille,
+      salt: Long = SplitSalt): DataFrame =
     documents
       .select(col("doc_id"), col("lang"), col("source"))
       .withColumn("split",
-        when(h < testPermille, lit("test"))
-          .when(h < testPermille + valPermille, lit("val"))
-          .otherwise(lit("train")))
+        splitOf(col("doc_id"), testPermille, valPermille, salt))
+
+  /** p08/p10/p14 split geometry — shared with the registered oracles
+    * (SparkEntry builds the p08, p10 and p14 SQL from THESE constants,
+    * the p11 discipline): 1 % test, 5 % val, the rest train.
+    */
+  val SplitTestPermille: Int = 10
+  val SplitValPermille: Int = 50
+  val SplitSalt: Long = 9176L
+
+  /** The salted three-way split p08, p10 and p14 assign: "test" when
+    * `saltedBucket(key, salt, 1000)` lands below `testPermille`, "val"
+    * below `testPermille + valPermille`, else "train".
+    */
+  private[graft] def splitOf(key: Column, testPermille: Int, valPermille: Int,
+      salt: Long): Column = {
+    val h = saltedBucket(key, salt, 1000L)
+    when(h < testPermille, lit("test"))
+      .when(h < testPermille + valPermille, lit("val"))
+      .otherwise(lit("train"))
   }
 
-  /** The resolved (doc_id, cluster_rep) map is a BUILD-ONCE artifact
+  /** (doc_id, lang, source, cluster_rep, rep_id): every document with
+    * its near-dup cluster's representative, or itself when it has no
+    * near dup (left join + coalesce) — what p10 splits on and p12
+    * sizes clusters by.
+    *
+    * The resolved (doc_id, cluster_rep) map is a BUILD-ONCE artifact
     * per corpus cut (the d10/s02 index precedent): a deployment
     * resolves the pair graph once — usually as a byproduct of the
-    * dedup pass it already runs (p03) — and every split consumer
+    * dedup pass it already runs (p03) — and every dedup-aware consumer
     * reads the map. Built through `Staging.memo`, localCheckpoint'ed
-    * (dup graph nodes only).
-    *
-    * The map is shared by p10 (splits) and p12 (soft-dedup sampling)
-    * — one pair-graph resolution per corpus cut serves every
-    * dedup-aware consumer.
+    * (dup graph nodes only), so p10 and p12 share one resolution.
     */
-  private def resolvedGroups(documents: DataFrame,
-      cacheKey: String): DataFrame =
-    graft.Staging.memo("p10_groups", cacheKey, documents.sparkSession) {
-      graft.operators.Dedup.dedupGroups(
-        graft.operators.Dedup.ngramJaccard(documents)).localCheckpoint(true)
-    }
+  private[graft] def withRepIds(documents: DataFrame,
+      cacheKey: String): DataFrame = {
+    val groups =
+      graft.Staging.memo("p10_groups", cacheKey, documents.sparkSession) {
+        Dedup.dedupGroups(Dedup.ngramJaccard(documents)).localCheckpoint(true)
+      }
+    documents
+      .select(col("doc_id"), col("lang"), col("source"))
+      .join(groups.select(col("doc_id"), col("cluster_rep")),
+        Seq("doc_id"), "left")
+      .withColumn("rep_id", coalesce(col("cluster_rep"), col("doc_id")))
+  }
 
   /** p10_leak_safe_split — DEDUP-AWARE train/val/test assignment:
     * p08 splits each document independently, so a near-duplicate
@@ -587,23 +638,15 @@ object Corpus {
     * existing cluster's rep). The split itself stays a projection:
     * the only per-doc state added is the 8-byte rep_id.
     */
-  def leakSafeSplit(documents: DataFrame, testPermille: Int = 10,
-      valPermille: Int = 50, salt: Long = 9176L,
-      cacheKey: String = ""): DataFrame = {
-    val groups = resolvedGroups(documents, cacheKey)
-    val h = saltedBucket(col("rep_id"), salt, 1000L)
-    documents
-      .select(col("doc_id"), col("lang"), col("source"))
-      .join(groups.select(col("doc_id"), col("cluster_rep")),
-        Seq("doc_id"), "left")
-      .withColumn("rep_id", coalesce(col("cluster_rep"), col("doc_id")))
+  def leakSafeSplit(documents: DataFrame,
+      testPermille: Int = SplitTestPermille,
+      valPermille: Int = SplitValPermille, salt: Long = SplitSalt,
+      cacheKey: String = ""): DataFrame =
+    withRepIds(documents, cacheKey)
       .withColumn("split",
-        when(h < testPermille, lit("test"))
-          .when(h < testPermille + valPermille, lit("val"))
-          .otherwise(lit("train")))
+        splitOf(col("rep_id"), testPermille, valPermille, salt))
       .select(col("doc_id"), col("rep_id"), col("lang"), col("source"),
         col("split"))
-  }
 
   /** p12_soft_dedup_sample — count each near-dup cluster ONCE in the
     * mixture without hard-dropping: every document is admitted with
@@ -633,14 +676,8 @@ object Corpus {
     */
   def softDedupSample(documents: DataFrame, salt: Long = 5407L,
       cacheKey: String = ""): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val groups = resolvedGroups(documents, cacheKey)
     val h = saltedBucket(col("doc_id"), salt, 1000000L)
-    documents
-      .select(col("doc_id"), col("lang"), col("source"))
-      .join(groups.select(col("doc_id"), col("cluster_rep")),
-        Seq("doc_id"), "left")
-      .withColumn("rep_id", coalesce(col("cluster_rep"), col("doc_id")))
+    withRepIds(documents, cacheKey)
       .withColumn("cluster_size",
         count(lit(1)).over(Window.partitionBy(col("rep_id"))))
       .filter(h * col("cluster_size") < 1000000L)
@@ -865,7 +902,6 @@ object Corpus {
     */
   def sourceCap(documents: DataFrame, cap: Int = 10,
       saltBuckets: Int = 16, salt: Long = 271L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val pri = documents
       .select(col("doc_id"), col("source"))
       .withColumn("priority",
@@ -914,7 +950,6 @@ object Corpus {
   def batchAssembly(documents: DataFrame, embeddings: DataFrame,
       batchSize: Int = 32, buckets: Int = 64,
       salt: Long = 911L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val hashSpace = 1L << 20
     val pairs = documents.select(col("doc_id"), col("source"))
       .join(embeddings.select(col("vec_id").as("doc_id"), col("label")),
@@ -943,30 +978,30 @@ object Corpus {
   }
 
   /** p14 geometry — shared with the registered oracle (SparkEntry
-    * builds the SQL from THESE constants, the p13 discipline).
+    * builds the SQL from THESE constants, the p13 discipline). The
+    * split reads p08's Split* constants, the mixture p13's Budget*.
     */
   val BuildMinQualityBp: Int = 5000 // basis points: 0.5
   val BuildBudgetTokens: Long = 2048L
-  val BuildTestPermille: Int = 10
-  val BuildValPermille: Int = 50
-  val BuildSplitSalt: Long = 9176L
 
   /** p14_training_build — the composition CAPSTONE: the whole
     * training-data build as ONE declarative plan, proving the
     * operator surface composes without re-scanning the corpus at
     * each stage. The chain is the pipeline a real pretraining drop
-    * runs, each stage this library's registered operator:
+    * runs, each stage calling the rule its registered operator runs:
     *
-    *   clean (p01's quality gate) → exact dedup (p03's min-id layer)
-    *   → fuzzy dedup graph (d04 pairs → d07 components, reps kept)
-    *   → train/val/test split (p08's salted hash; LEAK-SAFE BY
-    *     CONSTRUCTION here — p10 exists because near-dup pairs can
-    *     straddle a split boundary, but this pipeline hard-dedups
-    *     first, so every cluster is already one representative and
-    *     rep_id = doc_id for every surviving row)
-    *   → token-budget mixture on the train slice (p13's integer rate
-    *     derivation from measured token mass, epochs replicated
-    *     map-side)
+    *   clean (`qualityGate`, p01's) → exact dedup (p03's min-id
+    *     survivor per normalized-text hash, `buildDedupSets`)
+    *   → fuzzy dedup graph (`fuzzyGroups`, p03's d04 pairs → d07
+    *     components; `fuzzyDrops` removes all but each cluster's rep)
+    *   → train/val/test split (`splitOf`, p08's salted hash under the
+    *     Split* geometry; LEAK-SAFE BY CONSTRUCTION here — p10 exists
+    *     because near-dup pairs can straddle a split boundary, but
+    *     this pipeline hard-dedups first, so every cluster is already
+    *     one representative and rep_id = doc_id for every surviving
+    *     row)
+    *   → token-budget mixture on the train slice (p13's `tokenRates`
+    *     over the train slice's token mass, then `rateCopies`)
     *   → sequence packing per (split, source, epoch) (t07's
     *     concat-then-chunk)
     *   → the manifest rollup a consumer validates the drop with
@@ -983,11 +1018,10 @@ object Corpus {
     * pipeline and the split table, so it is materialized once for
     * the two consumers and released once the split table is
     * checkpointed.
-    * The mixture's rate table is a source-cardinality aggregate
-    * broadcast back (p13's pass-1, here fed from the SAME scan
-    * instead of a second one — composing the stages SAVES p13's
-    * second text scan, which is the capstone's point); `documents`
-    * is read once. The rollup is two algebraic hash aggregates; the
+    * The mixture's rate table (`tokenRates`) is a source-cardinality
+    * aggregate broadcast back, here fed from the SAME scan instead of
+    * p13's pass 1 — composing the stages SAVES p13's second text
+    * scan, which is the capstone's point; `documents` is read once. The rollup is two algebraic hash aggregates; the
     * first counts each (split, source, epoch)'s packed sequences in
     * closed form (packedSeqCount), so packing runs no window.
     */
@@ -1025,9 +1059,7 @@ object Corpus {
     // after the split table is checkpointed, so they are not pinned
     // through the tail.
     val withSplit = withDedupSets(documents) { sets =>
-      val groups = Dedup.dedupGroups(
-        Dedup.ngramJaccardFromSets(fuzzyInput(sets)))
-      checkpointed(splitTable(sets, groups))
+      checkpointed(splitTable(sets, fuzzyGroups(sets)))
     }
     trainingBuildFrom(withSplit)
   }
@@ -1076,33 +1108,36 @@ object Corpus {
       case _ =>
     }
 
-  /** The fuzzy layer's input: the sets' documents with at least one
-    * shingle, (doc_id, sh, nsh) — what ngramJaccardFromSets reads.
+  /** The fuzzy layer p03 and p14 run over exact-dedup survivors
+    * (doc_id, sh, nsh, …): d04's candidate pipeline over the documents
+    * with at least one shingle (`ngramJaccardFromSets`), then d07's
+    * connected components, (doc_id, cluster_rep) for dup-graph nodes.
     */
-  private def fuzzyInput(sets: DataFrame): DataFrame =
-    sets.filter(col("nsh") > 0).select(col("doc_id"), col("sh"), col("nsh"))
+  private[graft] def fuzzyGroups(sets: DataFrame): DataFrame =
+    Dedup.dedupGroups(Dedup.ngramJaccardFromSets(
+      sets.filter(col("nsh") > 0)
+        .select(col("doc_id"), col("sh"), col("nsh"))))
+
+  /** The ids the fuzzy layer drops: every cluster member but its rep
+    * (p03's keep-one contract). Dup-graph-sized, so the anti-join
+    * that removes them broadcasts.
+    */
+  private[graft] def fuzzyDrops(groups: DataFrame): DataFrame =
+    groups.filter(col("doc_id") =!= col("cluster_rep")).select(col("doc_id"))
 
   /** The cleaned → exact-deduped → fuzzy-deduped → split doc table
     * (doc_id, source, n_tokens, split), UN-materialized, from the
-    * dedup sets and the d07 groups resolved over their pairs: only
-    * the dup-graph sliver flows in from the groups, reps survive
-    * (p03's contract). Reads `sets` a second time (the first read is
-    * the pair pipeline's), which is why trainingBuild materializes
-    * them first (withDedupSets).
+    * dedup sets and their fuzzy groups. Reads `sets` a second time
+    * (the first read is the pair pipeline's), which is why
+    * trainingBuild materializes them first (withDedupSets). The split
+    * keys on doc_id, which is rep_id after hard dedup.
     */
   private def splitTable(sets: DataFrame,
-      groups: DataFrame): DataFrame = {
-    val dropped = groups.filter(col("doc_id") =!= col("cluster_rep"))
-      .select(col("doc_id"))
-    val kept = sets.select(col("doc_id"), col("source"), col("n_tokens"))
-      .join(dropped, Seq("doc_id"), "left_anti")
-    // split: p08's salted hash on doc_id (≡ rep_id after hard dedup)
-    val h = saltedBucket(col("doc_id"), BuildSplitSalt, 1000L)
-    kept.withColumn("split",
-      when(h < BuildTestPermille, lit("test"))
-        .when(h < BuildTestPermille + BuildValPermille, lit("val"))
-        .otherwise(lit("train")))
-  }
+      groups: DataFrame): DataFrame =
+    sets.select(col("doc_id"), col("source"), col("n_tokens"))
+      .join(fuzzyDrops(groups), Seq("doc_id"), "left_anti")
+      .withColumn("split", splitOf(col("doc_id"), SplitTestPermille,
+        SplitValPermille, SplitSalt))
 
   /** p14's FIRST stage — one corpus scan computing quality + exact-
     * dedup hash + shingle digests + token count (text dropped
@@ -1113,16 +1148,13 @@ object Corpus {
     * perfbench's traced pass call this shipped stage.
     */
   private[graft] def buildDedupSets(documents: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.{ShingleExprs, TextOps}
-    val minQ = BuildMinQualityBp / 10000.0
-    val enriched = TextAnalysis
-      .qualityScore(documents, passthrough = Seq("lang", "source", "text"))
-      .filter(col("quality_score") >= minQ)
+    val enriched = qualityGate(documents, BuildMinQualityBp / 10000.0)
       .select(col("doc_id"), col("source"), col("n_tokens"),
         xxhash64(TextOps.normText(col("text"))).as("nh"),
         ShingleExprs.shingleHashSet(col("text"), 3).as("sh"))
     val surv = Window.partitionBy(col("nh"))
+    // A plain min, not p03's NULLS-LAST pick: p14's oracle `survivors`
+    // join drops a NULL-id row, where p03's keeps it.
     enriched
       .withColumn("_min", min(col("doc_id")).over(surv))
       .filter(col("doc_id") === col("_min"))
@@ -1135,36 +1167,14 @@ object Corpus {
     * table, never the corpus.
     */
   private def trainingBuildFrom(withSplit: DataFrame): DataFrame = {
-    // mixture (train slice only): p13's integer rate derivation from
-    // the CLEANED, DEDUPED train token mass — metadata-scale agg,
-    // broadcast back
+    // mixture (train slice only): p13's `tokenRates` over the CLEANED,
+    // DEDUPED train token mass, then its `rateCopies`
     val train = withSplit.filter(col("split") === "train")
-    val perSrc = train.groupBy(col("source"))
-      .agg(sum(col("n_tokens")).as("toks"))
-    val total = perSrc.agg(sum(col("toks")).as("t_corpus"))
-    val w = BudgetTargets.toSeq.sortBy(_._1)
-      .foldLeft(lit(BudgetDefaultTargetPermille)) { case (acc, (s, v)) =>
-        when(col("source") === s, lit(v)).otherwise(acc)
-      }
-    val rates = perSrc.crossJoin(broadcast(total))
-      .filter(col("toks").isNotNull && col("toks") > 0)
-      .withColumn("w_permille", w.cast("long"))
-      .withColumn("tr",
-        least(expr("(t_corpus * 1000) DIV toks"), lit(BudgetTCap)))
-      .withColumn("r",
-        least(expr(s"($BudgetBetaPermille * w_permille * tr) DIV 1000000"),
-          lit(BudgetMaxRatePermille)))
-      .select(col("source"), col("r"))
-    val trainRep = train
-      .join(broadcast(rates), Seq("source"))
-      .withColumn("n_copies",
-        expr("r DIV 1000") +
-          when(saltedBucket(col("doc_id"), BudgetSalt, 1000L) <
-            pmod(col("r"), lit(1000L)), 1L).otherwise(0L))
-      .filter(col("n_copies") > 0)
-      .select(col("doc_id"), col("source"), col("split"), col("n_tokens"),
-        explode(sequence(lit(0L),
-          col("n_copies").cast("long") - 1)).as("epoch"))
+    val rates = tokenRates(
+      train.groupBy(col("source")).agg(sum(col("n_tokens")).as("toks")),
+      BudgetTargets, BudgetDefaultTargetPermille, BudgetBetaPermille)
+    val trainRep = rateCopies(train, rates, BudgetSalt,
+      Seq("doc_id", "source", "split", "n_tokens"))
     val heldOut = withSplit.filter(col("split") =!= "train")
       .select(col("doc_id"), col("source"), col("split"), col("n_tokens"),
         lit(0L).as("epoch"))
@@ -1250,7 +1260,6 @@ object Corpus {
     */
   def shardShuffle(documents: DataFrame, shards: Int = 8,
       saltShard: Long = 5711L, saltOrder: Long = 8231L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("shard"))
       .orderBy(col("ord"), col("doc_id"))
     documents

@@ -196,34 +196,42 @@ class CorpusSpec extends AnyFunSuite {
 
   test("p11: epoch budget — exact copy counts, dense epochs, map-side plan") {
     val docs = Tables.documents(spark, sf)
-    val out = SparkEntry.queries("p11_epoch_mixture")(spark, sf)
-    val rows = out.collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    // exact recompute: n_copies = ⌊w⌋ + [salted hash < w mod 1000]
-    val expected = docs.select("doc_id", "source").collect().map { r =>
-      val id = r.getLong(0); val src = r.getString(1)
-      val w = Corpus.EpochWeights.getOrElse(src,
-        Corpus.EpochDefaultPermille)
-      val h = (id % 1000000007L + Corpus.EpochSalt) % 1000000007L *
-        2654435761L % 1000000007L * 2654435761L % 1000L
-      (id, src) -> (w / 1000 + (if (h < w % 1000) 1 else 0))
-    }.toMap
-    val byDoc = rows.groupBy(r => (r._1, r._2))
-    byDoc.foreach { case (k, copies) =>
-      assert(copies.length == expected(k), s"$k copy count")
-      // epochs are the dense 0-based copy index — what a loader
-      // resumes/dedups against
-      assert(copies.map(_._3).sorted.toSeq ===
-        (0L until copies.length.toLong).toSeq, s"$k epochs")
+    // the registered defaults, then a non-default dial set (other
+    // weights, a full-copy default, another salt)
+    val dials = Seq(
+      (Corpus.EpochWeights, Corpus.EpochDefaultPermille, Corpus.EpochSalt,
+        SparkEntry.queries("p11_epoch_mixture")(spark, sf)),
+      (Map("src0" -> 700, "src2" -> 3250), 1600, 4111L,
+        Corpus.epochMixture(docs, weights = Map("src0" -> 700,
+          "src2" -> 3250), defaultPermille = 1600, salt = 4111L)))
+    dials.foreach { case (weights, dflt, salt, out) =>
+      val rows = out.collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+      // exact recompute: n_copies = ⌊w⌋ + [salted hash < w mod 1000]
+      val expected = docs.select("doc_id", "source").collect().map { r =>
+        val id = r.getLong(0); val src = r.getString(1)
+        val w = weights.getOrElse(src, dflt)
+        val h = (id % 1000000007L + salt) % 1000000007L *
+          2654435761L % 1000000007L * 2654435761L % 1000L
+        (id, src) -> (w / 1000 + (if (h < w % 1000) 1 else 0))
+      }.toMap
+      val byDoc = rows.groupBy(r => (r._1, r._2))
+      byDoc.foreach { case (k, copies) =>
+        assert(copies.length == expected(k), s"$k copy count ($salt)")
+        // epochs are the dense 0-based copy index — what a loader
+        // resumes/dedups against
+        assert(copies.map(_._3).sorted.toSeq ===
+          (0L until copies.length.toLong).toSeq, s"$k epochs ($salt)")
+      }
+      assert(rows.length ==
+        expected.values.sum, "total fan-out = the mixture's epoch budget")
+      assert(byDoc.keys.map(_._1).toSet ===
+        expected.filter(_._2 > 0).keys.map(_._1).toSet)
+      // the budget is a map-side projection: no exchange anywhere
+      val plan = out.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"),
+        s"p11 must not shuffle:\n$plan")
     }
-    assert(rows.length ==
-      expected.values.sum, "total fan-out = the mixture's epoch budget")
-    assert(byDoc.keys.map(_._1).toSet ===
-      expected.filter(_._2 > 0).keys.map(_._1).toSet)
-    // the budget is a map-side projection: no exchange anywhere
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"),
-      s"p11 must not shuffle:\n$plan")
   }
 
   test("p12: 1/cluster-size admission — exact, singleton-total, size-aware") {
@@ -474,7 +482,8 @@ class CorpusSpec extends AnyFunSuite {
   }
 
   test("p13: derived token-budget rates + admission equal an exact replay") {
-    val rows = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sf)
+    val rows = docs
       .select("doc_id", "source", "text").collect()
       .map { r =>
         val t = Option(r.getString(2)).map(_.trim.toLowerCase)
@@ -488,28 +497,39 @@ class CorpusSpec extends AnyFunSuite {
     val tokBySrc = rows.groupBy(_._2)
       .map { case (s, rs) => s -> rs.flatMap(_._3).sum }
     val tCorpus = tokBySrc.values.sum
-    val expected = rows.flatMap { case (id, src, _) =>
-      val toks = tokBySrc(src)
-      val wS = Corpus.BudgetTargets.getOrElse(src,
-        Corpus.BudgetDefaultTargetPermille).toLong
-      val tr = math.min(tCorpus * 1000L / toks, Corpus.BudgetTCap)
-      val r = math.min(Corpus.BudgetBetaPermille * wS * tr / 1000000L,
-        Corpus.BudgetMaxRatePermille)
-      val copies = r / 1000L +
-        (if (bucket(id, Corpus.BudgetSalt) < r % 1000L) 1L else 0L)
-      (0L until copies).map(e => (id, src, e))
-    }.toSet
-    val got = SparkEntry.queries("p13_token_mixture")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-      .toSet
-    assert(got === expected)
-    assert(got.nonEmpty)
-    // directional sanity: the token-light named source repeats, the
-    // corpus-dominant tail downsamples (rates differ across sources)
-    val perSrcEpochs = got.groupBy(_._2).map { case (s, g) =>
-      s -> g.map(_._1).toSet.size
+    // the registered defaults, then a non-default dial set (other
+    // targets and default share, another budget and salt)
+    val dials = Seq(
+      (Corpus.BudgetTargets, Corpus.BudgetDefaultTargetPermille,
+        Corpus.BudgetBetaPermille, Corpus.BudgetSalt,
+        SparkEntry.queries("p13_token_mixture")(spark, sf)),
+      (Map("src1" -> 450, "src2" -> 40), 150, 700, 3331L,
+        Corpus.tokenBudgetMixture(docs, targets = Map("src1" -> 450,
+          "src2" -> 40), defaultTargetPermille = 150, betaPermille = 700,
+          salt = 3331L)))
+    dials.foreach { case (targets, dflt, beta, salt, out) =>
+      val expected = rows.flatMap { case (id, src, _) =>
+        val toks = tokBySrc(src)
+        val wS = targets.getOrElse(src, dflt).toLong
+        val tr = math.min(tCorpus * 1000L / toks, Corpus.BudgetTCap)
+        val r = math.min(beta * wS * tr / 1000000L,
+          Corpus.BudgetMaxRatePermille)
+        val copies = r / 1000L +
+          (if (bucket(id, salt) < r % 1000L) 1L else 0L)
+        (0L until copies).map(e => (id, src, e))
+      }.toSet
+      val got = out
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+        .toSet
+      assert(got === expected, s"dials $targets/$dflt/$beta/$salt")
+      assert(got.nonEmpty)
+      // directional sanity: the token-light named source repeats, the
+      // corpus-dominant tail downsamples (rates differ across sources)
+      val perSrcEpochs = got.groupBy(_._2).map { case (s, g) =>
+        s -> g.map(_._1).toSet.size
+      }
+      assert(perSrcEpochs.size > 1)
     }
-    assert(perSrcEpochs.size > 1)
   }
 
   test("p14: manifest conserves the cleaned+deduped corpus across splits") {
@@ -530,9 +550,9 @@ class CorpusSpec extends AnyFunSuite {
     def bucket(id: Long, salt: Long): Long =
       ((id % P + salt) % P) * K % P * K % 1000L
     def splitOf(id: Long): String = {
-      val h = bucket(id, Corpus.BuildSplitSalt)
-      if (h < Corpus.BuildTestPermille) "test"
-      else if (h < Corpus.BuildTestPermille + Corpus.BuildValPermille) "val"
+      val h = bucket(id, Corpus.SplitSalt)
+      if (h < Corpus.SplitTestPermille) "test"
+      else if (h < Corpus.SplitTestPermille + Corpus.SplitValPermille) "val"
       else "train"
     }
     val expBySplit = keptIds.groupBy(splitOf).view.mapValues(_.size.toLong)
