@@ -410,9 +410,9 @@ object Corpus {
     * (permille ≤ 1000); this operator is the full budget, and p04's
     * downsampling falls out as the weight < 1000 special case.
     *
-    * Mechanics: ⌊w⌋ full copies replicate MAP-SIDE (explodeEpochs)
-    * and the fractional epoch admits a document iff
-    * its `saltedBucket` under p11's OWN salt lands below w mod 1000,
+    * Mechanics: ⌊w⌋ full copies replicate MAP-SIDE (explodeEpochs),
+    * and the fractional epoch admits a document iff its
+    * `saltedBucket` under p11's OWN salt lands below w mod 1000,
     * so the fractional slice is deterministic, reproducible, and
     * independent of p02/p04/p08's layers (the double-multiply
     * mod-p independence argument). Emits (doc_id, source, epoch):
